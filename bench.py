@@ -350,7 +350,7 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    from exporter_spark.benchlib import spill_totals
+    from exporter_spark.planinfo import spill_totals
 
     mem_spilled, disk_spilled = spill_totals(spark)
     total = round(sum(timings.values()), 3)

@@ -1,10 +1,11 @@
-"""Shared measurement primitives for bench.py and the tools/ probes.
+"""Shared timing primitives for bench.py and the tools/ probes.
 
 The BASELINE.md drift-adjudication protocol depends on every canary
 reading being comparable with every BENCH record ever taken — the
 workloads therefore live HERE, in one place, imported by bench.py,
-tools/canary_probe.py and the A/B harnesses. Changing either canary
-invalidates the recorded band: bump the note in BASELINE.md if you do.
+tools/canary_probe.py and tools/time_entries.py. Changing either
+canary invalidates the recorded band: bump the note in BASELINE.md if
+you do. Status-store readers (shuffle, spill) live in planinfo.
 """
 
 from __future__ import annotations
@@ -38,131 +39,6 @@ def cpu_canary(spark, n: int = 3) -> float:
         .collect(),
         n,
     )
-
-
-def _stage_list(spark):
-    """Settled AppStatusStore stage list (listener bus drained first —
-    the store is fed asynchronously, so an undrained read can miss a
-    just-finished stage or catch a previous job's metrics posting
-    mid-window)."""
-    jsc = spark.sparkContext._jsc.sc()  # noqa: SLF001
-    try:
-        jsc.listenerBus().waitUntilEmpty()
-    except Exception:  # noqa: BLE001 — drain is best-effort hygiene
-        pass
-    store = jsc.statusStore()
-    jvm = spark._jvm  # noqa: SLF001
-    # Spark 4's AppStatusStore.stageList takes (statuses, details,
-    # withSummaries, quantiles, taskStatus); empty statuses = all.
-    # This is Spark-PRIVATE JVM API reached via py4j (including the
-    # Scala default-arg accessor below): a minor upgrade that adds or
-    # reorders a parameter would break every observable built on it
-    # (bench tripwire, shuffle pins) with an opaque py4j error —
-    # translate that into an actionable message (ADVICE r10).
-    from py4j.protocol import Py4JError, Py4JJavaError, Py4JNetworkError
-
-    try:
-        return store.stageList(
-            jvm.java.util.ArrayList(),
-            False,
-            False,
-            getattr(store, "stageList$default$4")(),
-            jvm.java.util.ArrayList(),
-        )
-    except (Py4JJavaError, Py4JNetworkError):
-        # the call RESOLVED and threw in the JVM (OOM, listener-store
-        # fault), or the gateway connection dropped — neither is a
-        # signature problem; rewrapping them as one would misdirect
-        # debugging (ADVICE r11)
-        raise
-    except Py4JError as ex:
-        # non-Java, non-network Py4JError = the member/arity failed to
-        # resolve ("Method stageList([...]) does not exist", missing
-        # default-arg accessor) — the signature-drift case the message
-        # below exists for
-        ver = spark.version
-        raise RuntimeError(
-            "AppStatusStore.stageList signature changed (private Spark"
-            f" API; this session runs Spark {ver}, the call matches"
-            " 4.x's 5-arg form) — update benchlib._stage_list to the"
-            " new signature"
-        ) from ex
-
-
-def stage_marker(spark) -> int:
-    """Largest stage id the status store currently holds (-1 on a
-    fresh session). Take one BEFORE a serially-executed job and pass
-    it to :func:`shuffle_since` after: only stages NEWER than the
-    marker are summed, so the measurement is immune to the store
-    evicting old stages mid-window (``spark.ui.retainedStages``
-    defaults to 1000; in a long session a cumulative-total delta goes
-    NEGATIVE when eviction outruns the measured job's own traffic —
-    seen as a -2.3 MB "delta" on a zero-shuffle entry in the round-10
-    full-suite run)."""
-    marker = -1
-    it = _stage_list(spark).iterator()
-    while it.hasNext():
-        marker = max(marker, it.next().stageId())
-    return marker
-
-
-def shuffle_since(spark, marker: int) -> tuple[int, int]:
-    """(shuffle_write_bytes, shuffle_read_bytes) over stages with id
-    greater than ``marker`` (from :func:`stage_marker`). The caller
-    must not submit anything else between marker and reading —
-    concurrent jobs would fold in. Eviction-safe: old-stage eviction
-    cannot touch stages created inside the window (the store evicts
-    oldest-first, and a single measured query stays far under the
-    retained-stage cap)."""
-    w = r = 0
-    it = _stage_list(spark).iterator()
-    while it.hasNext():
-        s = it.next()
-        if s.stageId() > marker:
-            w += s.shuffleWriteBytes()
-            r += s.shuffleReadBytes()
-    return w, r
-
-
-def shuffle_totals(spark) -> tuple[int, int]:
-    """(shuffle_write_bytes, shuffle_read_bytes) summed over every
-    RETAINED stage of this application (round 10: the runtime
-    complement of the scan-audit plan pins; see
-    tools/shuffle_audit_r10.py). Fine as an app-level observable in a
-    short-lived session; for before/after deltas use
-    :func:`stage_marker` + :func:`shuffle_since` instead — past
-    ``spark.ui.retainedStages`` (1000) stages the store evicts
-    oldest-first and cumulative deltas can go negative."""
-    w = r = 0
-    it = _stage_list(spark).iterator()
-    while it.hasNext():
-        s = it.next()
-        w += s.shuffleWriteBytes()
-        r += s.shuffleReadBytes()
-    return w, r
-
-
-def spill_totals(spark) -> tuple[int, int]:
-    """(memory_bytes_spilled, disk_bytes_spilled) summed over every
-    stage this application has run — same AppStatusStore/deltas
-    contract as ``shuffle_totals`` (round 10). A nonzero DISK figure
-    means some task's working set outgrew its execution-memory share
-    and paid a serialize-to-disk round-trip: at sf0.1 the whole
-    corpus should run spill-free, so bench.py carries the app total
-    as a tripwire; the sweeps use deltas for attribution when a
-    scale point bends (the winnow 100x GC bend would have shown here
-    first had it spilled instead of stalling in GC). Same retained-
-    stage eviction caveat as ``shuffle_totals``: as an app tripwire
-    this can only under-report once a session exceeds
-    ``spark.ui.retainedStages`` stages — bench.py raises that cap in
-    its session so the corpus run stays fully covered."""
-    mem = disk = 0
-    it = _stage_list(spark).iterator()
-    while it.hasNext():
-        s = it.next()
-        mem += s.memoryBytesSpilled()
-        disk += s.diskBytesSpilled()
-    return mem, disk
 
 
 def io_canary(spark, n: int = 3) -> float:

@@ -16,11 +16,11 @@ Every formatter has two execution paths:
 
 from __future__ import annotations
 
-import re
 from typing import Iterable, Iterator, Protocol
 
 from pyspark.sql import DataFrame
 
+from exporter_spark import planinfo
 from exporter_spark.plans.spec import ExportSpec
 
 
@@ -70,28 +70,6 @@ class BaseFormatter:
 
     # -- input parallelism -----------------------------------------------------
 
-    # Logical-plan nodes whose presence means the input is NOT a
-    # scan-level frame: either it already crossed (or will cross) an
-    # exchange — so it arrives multi-partition at scale and spread()'s
-    # partition probe (queryExecution().toRdd()) would EXECUTE the
-    # upstream shuffle stages without the subsequent write reusing
-    # them (the r17 dedup dist_input finding: ~13s per probe on an
-    # exchange-bearing plan) — or it carries caller-established row
-    # placement/order (Sort, Repartition, limits) that a round-robin
-    # spread would silently destroy. Matched at line start of the
-    # ANALYZED plan string (no execution, no AQE): tree-drawing
-    # prefixes only, so column names can never false-positive.
-    _NON_SCAN_NODE = re.compile(
-        r"^[\s:+\-]*'?(Join|Aggregate|Sort|Window|Repartition(ByExpression)?"
-        r"|Deduplicate|GlobalLimit|LocalLimit|Intersect|Except"
-        r"|FlatMapGroupsIn\w+|FlatMapCoGroupsIn\w+|MapGroups|CoGroup)\b",
-        re.M,
-    )
-
-    def _scan_level(self, df: DataFrame) -> bool:
-        plan = df._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
-        return self._NON_SCAN_NODE.search(plan) is None
-
     def _spread_unordered(self, df: DataFrame, enabled: bool = True) -> DataFrame:
         """Scale-adaptive input parallelism for the distributed write
         paths. A one-row-group parquet input is an unsplittable
@@ -112,7 +90,7 @@ class BaseFormatter:
         through ``write(..., _spread=False)`` — its coalesce(1) IS the
         contract; a parameter, not instance state, so concurrent
         writes on one formatter cannot race a toggle), and the spread
-        only applies to SCAN-LEVEL plans (``_scan_level``): an
+        only applies to SCAN-LEVEL plans (``planinfo.scan_level``): an
         exchange-bearing input is already multi-partition at scale,
         and spread()'s partition probe would otherwise eagerly execute
         the upstream shuffle stages once per export on top of the
@@ -130,7 +108,7 @@ class BaseFormatter:
             or spec.limit >= 0
             or spec.preprocessor is not None
             or df.isStreaming
-            or not self._scan_level(df)
+            or not planinfo.scan_level(df)
         ):
             return df
         from exporter_spark.operators.partitioning import spread

@@ -540,7 +540,8 @@ def ivf_topk(
     real cluster structure reaches the same recall with fewer probes.
     A user taking the r13-era default (4) got 0.55 recall silently —
     raise n_probe for recall, lower it for latency, and re-measure on
-    YOUR corpus with tools/ivf_recall_sweep_r13.py.
+    YOUR corpus with tools/ivf_recall_sweep.py (the r13 curve is in
+    SCALE.md, "Round-13 IVF recall-vs-n_probe characterization").
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector

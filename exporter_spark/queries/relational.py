@@ -54,7 +54,7 @@ def q1_pricing_summary(spark, sf_dir, fast: bool = False):
         # width exchange feeds a join that re-shuffles by key anyway)
         # and keep their scan shapes. Re-adjudicated r18 on the
         # driver's own cold-JVM methodology (VERDICT r17 watch item;
-        # tools/ab_q1_coldjvm_r18.py, 10 interleaved pairs): spread
+        # OPTIMIZATION_r18.md item 1, 10 interleaved pairs): spread
         # wins 6 of 8 usable pairs and every quiet-canary pair
         # (1.29-1.62 vs 1.79-2.04) — KEPT; the r17 driver 0.89x was a
         # single elevated-run artifact.

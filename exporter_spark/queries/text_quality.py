@@ -433,7 +433,7 @@ def cms_top_tokens(spark, sf_dir):
     sketch-build shuffle is bounded by depth x width cells per map
     partition regardless of corpus bytes or vocabulary size, and
     cms_merge folds per-increment sketches without re-reading the
-    corpus (tools/cms_sweep_r17.py)."""
+    corpus (SCALE.md, "Round-17 count-min sketch")."""
     from exporter_spark.operators import cms
     from exporter_spark.operators.partitioning import materialize, spread
 

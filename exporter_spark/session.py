@@ -85,7 +85,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         # The status store feeds the repo's runtime observables
-        # (benchlib shuffle/spill totals). The default retention
+        # (planinfo shuffle/spill totals). The default retention
         # (1000 stages, evicted oldest-first) silently truncates the
         # app-total spill tripwire on a full corpus run and made
         # cumulative shuffle deltas go NEGATIVE in long sessions

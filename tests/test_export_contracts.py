@@ -10,7 +10,8 @@ Three things are pinned here:
    test until the guard learns about it, instead of silently letting
    the round-robin spread permute ordered output.
 2. The spread applies ONLY to scan-level plans: an exchange-bearing
-   input (join/aggregate/sort/window/repartition/limit/distinct) is
+   input (join/aggregate/sort/window/repartition/limit/offset/distinct,
+   subqueries included) is
    already multi-partition at scale, and spread()'s partition probe
    would eagerly execute the upstream shuffle stages once per export
    on top of the write itself (ADVICE r17 medium #1).
@@ -109,6 +110,13 @@ def test_spread_skipped_on_non_scan_plans(spark, sf_dir):
         scan.repartition(2, "id"),
         scan.dropDuplicates(["v"]),
         scan.select(F.row_number().over(__import__("pyspark").sql.Window.orderBy("id")).alias("r")),
+        # on the bare parquet scan (no coalesce node to hide behind):
+        # SQL DISTINCT plans a Distinct node, not Deduplicate
+        spark.sql("SELECT DISTINCT lang FROM {t}", t=table),
+        table.offset(3),
+        spark.sql("SELECT /*+ REBALANCE */ * FROM {t}", t=table),
+        # the Aggregate sits in a scalar subquery, off the children
+        table.filter(F.col("doc_id") > table.select(F.max("doc_id")).scalar()),
     ):
         assert fmt._spread_unordered(shaped) is shaped, (
             f"spread applied to non-scan plan: {shaped._jdf.queryExecution().analyzed().toString()[:200]}"

@@ -31,7 +31,7 @@ def test_ivf_topk_structure_and_recall(spark, sf_dir):
     # library-version numeric drift, not behavior. The full
     # recall-vs-n_probe curve lives in SCALE.md round-13 /
     # tools/audits/r13_ivf_recall.json (sweep:
-    # tools/ivf_recall_sweep_r13.py). A drop below 18/25 is a recall
+    # tools/ivf_recall_sweep.py). A drop below 18/25 is a recall
     # REGRESSION, not noise.
     total_overlap = sum(
         len(by_q_exact[q_] & by_q_approx.get(q_, set())) for q_ in by_q_exact

@@ -19,13 +19,11 @@ pass over the corpus. "Executed" (round 10): FileScan nodes outside
 any InMemoryRelation subtree — a cached plan prints its child subtree
 under every consumer, so the raw text count rises exactly when a
 materialize() REMOVES corpus passes (the r10 tagged-frame persist
-doubled the raw count while cutting wall time 32%). Round 18: counted
-by the exact JVM plan-tree walk (scan_audit.executed_scans_tree) on
-both sides of the gate — the r10 string parser mis-ended its
-InMemoryRelation skip at the DEDENTED "== Final Plan ==" sections an
-executed cached subtree prints, counting cache reprints as executed
-scans; the snapshot (r18_scan_audit_sf0.001.txt) was regenerated with
-the tree walk on the same tree.
+doubled the raw count while cutting wall time 32%). Both sides of
+the gate count with the JVM plan-tree walk ``planinfo.executed_scans``
+(tools/scan_audit.py writes the snapshot with it): cache definitions
+are never entered, subquery plans are. The snapshot's header records
+its re-baselines.
 """
 
 from __future__ import annotations
@@ -35,6 +33,7 @@ import re
 
 import pytest
 
+from exporter_spark.planinfo import executed_scans
 from exporter_spark.queries import QUERIES
 
 _AUDIT = (
@@ -64,10 +63,9 @@ SENTINELS = (
 
 
 def _recorded_counts() -> dict[str, dict[str, int]]:
-    # round-10 snapshot format: FileScan is the EXECUTED count (scans
-    # outside any InMemoryRelation subtree — tools/scan_audit.py's
-    # executed_file_scans), RawFileScan the old text count kept for
-    # cross-round diffs against the r07-r09 snapshots
+    # snapshot format: FileScan is the EXECUTED count
+    # (planinfo.executed_scans), RawFileScan the old text count kept
+    # for cross-round diffs against the r07-r09 snapshots
     out: dict[str, dict[str, int]] = {}
     pat = re.compile(
         r"^(\w+): FileScan=(\d+) RawFileScan=(\d+)"
@@ -110,19 +108,8 @@ def test_sentinel_plan_shape_within_snapshot(spark, sf_dir, name):
     # only added wall time (ADVICE r09).
     jplan = df._jdf.queryExecution().executedPlan()  # noqa: SLF001
     plan = jplan.toString()
-    import sys
-
-    sys.path.insert(0, str(_AUDIT.parent.parent))
-    from scan_audit import executed_scans_tree
-
-    # Exact JVM tree walk (r18): the r10 string parser was fooled by
-    # nested-AQE "== Final Plan ==" section dedents inside executed
-    # cache-definition reprints — it read incremental_minhash_survivors
-    # as 7 executed scans where the tree holds exactly 1 (the narrow
-    # (doc_id, lang, source) delta scan that r18 deliberately traded
-    # for the text-bearing batch cache; see scan_audit.py docstrings).
     got = {
-        "FileScan": executed_scans_tree(jplan),
+        "FileScan": executed_scans(jplan),
         "InMem": plan.count("InMemoryTableScan"),
         "Reused": plan.count("ReusedExchange"),
     }
@@ -136,7 +123,7 @@ def test_sentinel_plan_shape_within_snapshot(spark, sf_dir, name):
 
 
 def test_tree_walk_counts_scans_structurally(spark, sf_dir):
-    """Pin executed_scans_tree's semantics on constructed plans:
+    """Pin executed_scans' semantics on constructed plans:
 
     * an uncached aggregate over one parquet table = 1 executed scan;
     * a self-join of the scan = 2 (each side really reads the file);
@@ -147,17 +134,15 @@ def test_tree_walk_counts_scans_structurally(spark, sf_dir):
       '== Final/Initial Plan ==' blocks defeat indentation-based
       skipping. The tree walk never enters cache definitions
       (InMemoryTableScanExec is a leaf), so execution state of the
-      cache cannot change its count.
+      cache cannot change its count;
+    * a filter on a scalar subquery over a second parquet read = 2: the
+      subquery's scan hangs off the filter's expression, not its
+      children, and executes like any other.
     """
-    import sys
-
-    sys.path.insert(0, str(_AUDIT.parent.parent))
-    from scan_audit import executed_scans_tree
-
     from pyspark.sql import functions as F
 
     def n_scans(df):
-        return executed_scans_tree(
+        return executed_scans(
             df._jdf.queryExecution().executedPlan()  # noqa: SLF001
         )
 
@@ -167,6 +152,9 @@ def test_tree_walk_counts_scans_structurally(spark, sf_dir):
     assert (
         n_scans(a.join(b, F.col("a.doc_id") == F.col("b.doc_id"))) == 2
     )
+    other = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    top = other.select(F.max("o_custkey")).scalar()
+    assert n_scans(base.filter(F.col("doc_id") < top)) == 2
 
     cached = base.groupBy("lang").count().persist()
     try:
@@ -178,3 +166,53 @@ def test_tree_walk_counts_scans_structurally(spark, sf_dir):
         assert n_scans(joined2) == 1
     finally:
         cached.unpersist(blocking=True)
+
+
+class _Seq(list):
+    """Stand-in for a py4j-wrapped Scala Seq."""
+
+    def size(self):
+        return len(self)
+
+    def apply(self, i):
+        return self[i]
+
+
+class _Node:
+    """Stand-in for a JVM plan node: class name, children, no subqueries."""
+
+    def __init__(self, name, *children):
+        self.name, self.kids = name, children
+
+    def getClass(self):
+        return self
+
+    def getSimpleName(self):
+        return self.name
+
+    def children(self):
+        return _Seq(self.kids)
+
+    def subqueries(self):
+        return _Seq()
+
+    def plan(self):
+        from py4j.protocol import Py4JError
+
+        raise Py4JError("no plan()")
+
+
+def test_walk_fails_loudly_instead_of_undercounting():
+    scans = _Node(
+        "UnionExec",
+        _Node("FileSourceScanExec"),
+        _Node("RowDataSourceScanExec"),
+        _Node("HiveTableScanExec"),
+        _Node("LocalTableScanExec"),
+        _Node("InMemoryTableScanExec"),
+    )
+    assert executed_scans(scans) == 3
+    with pytest.raises(RuntimeError, match="MicroBatchScanExec"):
+        executed_scans(_Node("ProjectExec", _Node("MicroBatchScanExec")))
+    with pytest.raises(RuntimeError, match="ShuffleQueryStageExec"):
+        executed_scans(_Node("ShuffleQueryStageExec"))

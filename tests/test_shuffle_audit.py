@@ -2,10 +2,10 @@
 
 The scan-audit snapshot pins PLAN shape; these tests pin the runtime
 complement — bytes actually moved — via AppStatusStore deltas
-(benchlib.shuffle_totals, same mechanism as
-tools/shuffle_audit_r10.py, whose committed full-registry snapshot
+(planinfo.stage_marker / shuffle_since, same mechanism as
+tools/shuffle_audit.py, whose committed full-registry snapshot
 lives in tools/audits/r12_shuffle_audit_sf0.001.json — re-recorded in
-round 11 because the r10 file predated benchlib's eviction-immune
+round 11 because the r10 file predated the eviction-immune
 stage_marker method: three entries' r10 values carried the old
 cumulative-delta method's stage-eviction bias, confirmed by exact
 isolated reproduction of the r11 readings).
@@ -39,7 +39,7 @@ import sys
 
 import pytest
 
-from exporter_spark.benchlib import shuffle_since, stage_marker
+from exporter_spark.planinfo import shuffle_since, stage_marker
 from exporter_spark.queries import QUERIES
 
 # operators documented as zero-shuffle / expression-only, confirmed
@@ -123,7 +123,7 @@ spark = (SparkSession.builder.appName("evictprobe").master("local[2]")
     .config("spark.ui.retainedStages", "20")
     .config("spark.ui.enabled", "false")
     .getOrCreate())
-from exporter_spark.benchlib import shuffle_totals, shuffle_since, stage_marker
+from exporter_spark.planinfo import shuffle_totals, shuffle_since, stage_marker
 for _ in range(40):
     spark.range(0, 20000, 1, 2).repartition(3)\\
         .write.mode("overwrite").format("noop").save()

@@ -6,7 +6,7 @@ the observable would actually READ nonzero when a task's working set
 outgrows its execution-memory share.  This forces a deterministic
 spill — ``spark.shuffle.spill.numElementsForceSpillThreshold`` makes
 the unsafe external sorter spill every N records regardless of memory
-pressure — and asserts ``benchlib.spill_totals`` reports it on both
+pressure — and asserts ``planinfo.spill_totals`` reports it on both
 counters.  Runs as a subprocess because the forced-spill config is
 session-level and must not leak into the suite's shared session.
 """
@@ -31,7 +31,7 @@ df = (spark.range(200_000)
       .withColumn("k", F.expr("id % 1000"))
       .withColumn("pad", F.expr("repeat('x', 64)")))
 df.orderBy("k", "id").write.mode("overwrite").format("noop").save()
-from exporter_spark.benchlib import spill_totals
+from exporter_spark.planinfo import spill_totals
 mem, disk = spill_totals(spark)
 print("SPILL", mem, disk)
 """

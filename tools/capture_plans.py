@@ -1,13 +1,12 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") for every bench-measured query into
-plans/r18/<name>_<tag>.txt (tag = before/after). Plans are the initial
+plans/<tag>/<name>.txt (e.g. tag = r19_before / r19_after). Plans are the initial
 AdaptiveSparkPlan (pre-execution) — the same artifact every prior
 round's plan audits committed. Usage:
 
-    python tools/capture_plans_r18.py <tag> [sf_dir] [name ...]
+    python tools/capture_plans.py <tag> [sf_dir] [name ...]
 
-With no names, captures all of bench.BENCH_QUERIES. Plans go to
-plans/r18/. The export entries are writer-side (no single DataFrame
+With no names, captures all of bench.BENCH_QUERIES. The export entries are writer-side (no single DataFrame
 plan) and are skipped here; their shape is documented from the
 formatter code + scan audit instead.
 """
@@ -37,7 +36,7 @@ def main() -> int:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r18",
+        tag,
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("exporter_spark-plan-capture")
@@ -47,7 +46,7 @@ def main() -> int:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(buf.getvalue())
         print(f"[plans] {name} -> {path} ({len(buf.getvalue())} bytes)")

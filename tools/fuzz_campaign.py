@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Round-17 extended corruption-fuzz campaign over every media
+"""Extended corruption-fuzz campaign over every media
 decoder.
 
 The in-suite hypothesis fuzzes run 40-200 examples per test per
@@ -17,7 +17,7 @@ reproducible:
   so raw-looking messages (numpy's own ValueErrors are the
   camouflaged leak class — the AVI find) can be reviewed by eye.
 
-Usage: python tools/fuzz_campaign_r17.py [n_mutations_per_codec]
+Usage: python tools/fuzz_campaign.py [n_mutations_per_codec]
 (default 4000). Prints one JSON line; commit to
 tools/audits/r17_fuzz_campaign.json.
 """
@@ -37,7 +37,6 @@ import numpy as np  # noqa: E402
 
 from exporter_spark.operators import avi, gif, jpeg, multimodal  # noqa: E402
 
-N = int(sys.argv[1]) if len(sys.argv) > 1 else 4000
 SEED = 20260817
 
 BAD_TYPES = (
@@ -136,13 +135,14 @@ def mutate(rng: random.Random, base: bytes) -> bytes:
 
 
 def main() -> None:
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 4000
     rng = random.Random(SEED)
-    report: dict = {"seed": SEED, "n_per_codec": N, "codecs": {}}
+    report: dict = {"seed": SEED, "n_per_codec": n, "codecs": {}}
     hard_fails = []
     for name, (base, decode) in bases().items():
         msgs: Counter[str] = Counter()
         counts = Counter()
-        for i in range(N):
+        for i in range(n):
             payload = mutate(rng, base)
             try:
                 decode(payload)

@@ -8,7 +8,7 @@ recall@k against the exact brute-force cosine top-k at sf0.1, sweeping
 from, and that the tightened pytest floors (tests/test_ivf.py)
 reference.
 
-Usage: python tools/ivf_recall_sweep_r13.py [sf_dir] [out_json]
+Usage: python tools/ivf_recall_sweep.py [sf_dir] [out_json]
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ def main() -> None:
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
-        .appName("ivf-recall-sweep-r13")
+        .appName("ivf-recall-sweep")
         .getOrCreate()
     )
     emb = load_table(spark, sf_dir, "embeddings")

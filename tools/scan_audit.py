@@ -13,21 +13,14 @@ across SFs, unlike AQE's runtime stage replacements.
 tests/test_scan_audit_regression.py compares against the snapshots
 this writes using the identical parse, so the gate is consistent:
 
-  FileScan            parquet scans that EXECUTE — occurrences outside
-                      any InMemoryRelation subtree. (Round 10: the
-                      raw text count double-counted cached plans —
-                      InMemoryRelation prints its child subtree, so a
-                      materialize() that REMOVED corpus passes showed
-                      up as the FileScan count doubling. Round 18:
-                      counted by an exact JVM plan-tree walk,
-                      ``executed_scans_tree`` — the r10 string parser
-                      was fooled by nested-AQE ``== Final Plan ==``
-                      section dedents inside executed cache reprints
-                      and remains only for r07–r17 snapshot diffs.
-                      RawFileScan keeps the raw text count for
-                      reference. Snapshots from r07-r09 used the raw
-                      count — diffs across the r10 boundary must
-                      compare RawFileScan.)
+  FileScan            file scans that EXECUTE, counted by the JVM
+                      plan-tree walk ``planinfo.executed_scans``:
+                      subquery plans included, cache definitions
+                      excluded (a cached subtree executes once at
+                      cache build; InMemoryRelation only reprints it
+                      under every consumer). RawFileScan keeps the raw
+                      text count for diffs against older snapshots —
+                      r07-r09 snapshots used it as their FileScan.
   InMemoryTableScan   branches served from a materialize()d frame
   ReusedExchange      runtime exchange dedup
 
@@ -37,92 +30,14 @@ Usage: python tools/scan_audit.py [sf_dir] [name_substring ...]
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from exporter_spark.operators.partitioning import cache_scope  # noqa: E402
+from exporter_spark.planinfo import executed_scans  # noqa: E402
 from exporter_spark.queries import QUERIES  # noqa: E402
 from exporter_spark.session import get_spark  # noqa: E402
-
-# Anchored to the tree-prefix alphabet (ADVICE r10): only indent made
-# of spaces and ':' (branch continuation) may precede the node marker,
-# so a '+- ' occurring inside a node's ARGUMENT text (a pushed-filter
-# or schema string) can no longer be mistaken for a deeper node and
-# prematurely end an InMemoryRelation skip.
-_NODE_MARK = re.compile(r"^([ :]*)(\+-|:-)\s")
-
-
-def executed_file_scans(plan: str) -> int:
-    """FileScan nodes OUTSIDE any InMemoryRelation subtree — the scans
-    that actually read files when the plan runs (the cached subtree
-    executes once at cache build; its printout under every
-    InMemoryTableScan consumer is description, not execution).
-
-    KNOWN OVERCOUNT (r18): an already-executed cached subtree prints
-    nested ``AdaptiveSparkPlan isFinalPlan=true`` sections whose
-    ``== Final Plan ==`` / ``== Initial Plan ==`` blocks are DEDENTED
-    below the InMemoryRelation's own indent, so the indentation-based
-    skip ends early and the cache-definition reprint is counted as
-    executed (incremental_minhash_survivors read 7 where the real
-    count is 1). Kept only for diffs against the r07–r17 snapshots;
-    the gate and the r18+ snapshots use :func:`executed_scans_tree`,
-    which walks the actual JVM plan tree and cannot be fooled by
-    string layout."""
-    n = 0
-    skip_deeper_than: int | None = None
-    for i, line in enumerate(plan.splitlines()):
-        m = _NODE_MARK.match(line)
-        depth = len(m.group(1)) if m else (0 if i == 0 else None)
-        if depth is None:  # argument/continuation line — not a node
-            continue
-        if skip_deeper_than is not None:
-            if depth > skip_deeper_than:
-                continue  # still inside the cached subtree
-            skip_deeper_than = None
-        if "InMemoryRelation" in line:
-            skip_deeper_than = depth
-            continue
-        if "FileScan" in line:
-            n += 1
-    return n
-
-
-def executed_scans_tree(jplan) -> int:
-    """Exact executed-file-scan count: walk the JVM SparkPlan tree
-    (``df._jdf.queryExecution().executedPlan()``) and count file-source
-    scan nodes. Cached subtrees are excluded STRUCTURALLY —
-    ``InMemoryTableScanExec`` is a leaf whose cached plan hangs off
-    ``relation.cachedPlan``, not ``children()``, so a child walk never
-    enters a cache definition; the string printout that fooled
-    :func:`executed_file_scans` (nested-AQE section dedent) is display
-    only. ``AdaptiveSparkPlanExec`` is likewise a leaf wrapper — its
-    pre-execution tree is reached through ``inputPlan()``; QueryStage
-    wrappers (present only inside already-final subplans) are unwrapped
-    through ``plan()``."""
-    n = 0
-    stack = [jplan]
-    while stack:
-        node = stack.pop()
-        cls = node.getClass().getSimpleName()
-        if "FileSourceScan" in cls or "BatchScan" in cls:
-            n += 1
-            continue
-        if "AdaptiveSparkPlan" in cls:
-            stack.append(node.inputPlan())
-            continue
-        if "QueryStage" in cls:
-            try:
-                stack.append(node.plan())
-            except Exception:  # noqa: BLE001 — unknown stage wrapper
-                pass
-            continue
-        ch = node.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
-    return n
-
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -158,11 +73,9 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
                 jplan = df._jdf.queryExecution().executedPlan()
                 plan = jplan.toString()
-                # FileScan from the exact tree walk (r18 — the string
-                # parser overcounts cache reprints under nested-AQE
-                # section dedents); RawFileScan/InMem/Reused stay
-                # text counts for cross-round diffability.
-                n_exec = executed_scans_tree(jplan)
+                # FileScan from the tree walk; RawFileScan/InMem/
+                # Reused stay text counts for cross-round diffability.
+                n_exec = executed_scans(jplan)
             print(
                 f"{name}: FileScan={n_exec} "
                 f"RawFileScan={plan.count('FileScan')} "

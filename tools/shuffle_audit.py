@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Round-10 shuffle-bytes audit: bytes actually moved per registry
-entry, from the JVM AppStatusStore.
+"""Shuffle-bytes audit: bytes actually moved per registry entry, from
+the JVM AppStatusStore.
 
 The scan-audit snapshot (tools/scan_audit.py) pins PLAN shape —
 FileScan / InMemoryTableScan / ReusedExchange counts. This tool pins
@@ -12,16 +12,17 @@ recorded numbers, and gives future rounds a byte-level diff when a
 plan change silently starts shuffling the corpus (wall-clock at sf0.1
 can hide a 2x byte regression inside host noise; bytes cannot).
 
-Mechanics: AppStatusStore.stageList is read before and after each
-entry's noop-forced execution; the delta over completed stages is the
-entry's traffic. Deltas are exact in this single-session tool (queries
-run serially, nothing else submits jobs). Shuffle bytes are
+Mechanics: planinfo.stage_marker / shuffle_since read the
+AppStatusStore stage list before and after each entry's noop-forced
+execution; the stages created in between carry the entry's traffic.
+Deltas are exact in this single-session tool (queries run serially,
+nothing else submits jobs). Shuffle bytes are
 compression- and partitioning-dependent, so the committed snapshot is
 an OBSERVABLE with a generous regression band, not a byte-exact pin —
 tests/test_shuffle_audit.py gates only the structural claims (the
 zero-shuffle set stays zero) and a 2x growth band on the flagships.
 
-Usage: python tools/shuffle_audit_r10.py [sf_dir] [name_filter...]
+Usage: python tools/shuffle_audit.py [sf_dir] [name_filter...]
 """
 
 from __future__ import annotations
@@ -32,8 +33,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from exporter_spark.benchlib import shuffle_since, stage_marker  # noqa: E402
 from exporter_spark.operators.partitioning import cache_scope  # noqa: E402
+from exporter_spark.planinfo import shuffle_since, stage_marker  # noqa: E402
 from exporter_spark.queries import QUERIES  # noqa: E402
 from exporter_spark.session import get_spark  # noqa: E402
 
@@ -58,7 +59,7 @@ def main() -> None:
                 # at plan-construction time) do real shuffle work
                 # inside the builder, not the noop write. Marker-based
                 # so stage-store eviction over a 98-entry run cannot
-                # shrink a later entry's reading (benchlib round 10).
+                # shrink a later entry's reading (planinfo.stage_marker).
                 marker = stage_marker(spark)
                 df = q.fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()

@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """Isolated per-entry timing with the bench's exact methodology
 (min-of-N repeats, noop sink, cache_scope per entry, warmup action,
-cpu/io canaries recorded) — the round-17 optimization A/B harness.
+cpu/io canaries recorded). For an interleaved A/B, run it
+alternately from the two checkouts being compared.
 
 Usage:
-    python tools/time_entries_r17.py <name> [name ...]
+    python tools/time_entries.py <name> [name ...]
     SPARK_GRAFT_BENCH_REPEAT=N  repeats (default 3)
     SPARK_GRAFT_SF_DIR          data dir (default /root/testdata/sf0.1)
 
@@ -37,7 +38,7 @@ def _force(df) -> None:
 def main() -> int:
     names = sys.argv[1:]
     if not names:
-        print("usage: time_entries_r17.py <entry> [entry ...]", file=sys.stderr)
+        print("usage: time_entries.py <entry> [entry ...]", file=sys.stderr)
         return 2
     spark = get_spark("exporter_spark-ab")
     spark.range(1_000_000).select(F.sum("id")).collect()
