@@ -303,8 +303,8 @@ def main() -> None:
         from exporter_spark.formatters.xml import XMLFormatter
 
         timings["export_xml_docs"] = timed(
-            lambda: XMLFormatter(ExportSpec()).write(
-                li, f"{out_root}/xml_docs", documents=True
+            lambda: XMLFormatter(ExportSpec(), documents=True).write(
+                li, f"{out_root}/xml_docs"
             ),
             n_export,
         )

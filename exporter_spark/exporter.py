@@ -72,5 +72,5 @@ class Exporter:
         self.formatter.write(self.df, path, partition_by=partition_by)
 
     def write_single_part(self, path: str) -> None:
-        """One output file, formatted executor-side (coalesce(1))."""
+        """One output file, formatted executor-side."""
         self.formatter.write_single_part(self.df, path)

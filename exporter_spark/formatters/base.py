@@ -1,26 +1,38 @@
 """Formatter protocol — the Spark analog of codec.Codec
 (/root/reference/codec/codec.go:18-20).
 
-Every formatter has two execution paths:
+A text format describes itself once: a ``Framing``, the bytes around
+and between its records, which covers every rule of the reference's
+codecs (eager or lazy csv header and HTML skeleton, ndjson lines, the
+JSON array with nothing at all for no rows, XML's root written only
+once a row exists); and a record per row, a Catalyst ``Column`` over
+the spec's projection (``records``; JSON's fidelity stream renders in
+Python instead, ``stream_rows``). Two drivers consume it:
 
-* ``write(df, path)`` — the scale path: distributed part-files via
-  Spark's native writers (or partition-parallel text for HTML). This
-  is what runs on a 1000-executor cluster; no driver funneling.
-* ``format_string(df)`` / ``write_single_file(df, path)`` — the
-  fidelity path: one ordered byte stream identical to what the
-  reference's io.Writer would receive. Streams through
-  ``toLocalIterator()`` so the driver holds one partition at a time,
-  but it is inherently a single-stream concentration point — used for
-  golden-file tests, oracle comparison, and small exports only.
+* the fidelity stream (``iter_chunks``, behind ``format_string`` and
+  ``write_single_file``): one ordered byte stream identical to what the
+  reference's io.Writer would receive. The driver holds one partition
+  at a time, but it is a single-stream concentration point — golden
+  files, oracle comparison and small exports only.
+* the part-file driver (``write``, ``splice_document``): executors
+  write the records as text part files, partition columns in the
+  directory name; one document is those parts spliced JVM-side by
+  ``fsio.splice_parts`` inside the framing.
+
+Spark's native writers take ``write`` over where their bytes serve
+(csv, ndjson, XML ``documents``, columnar).
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Protocol
+from contextlib import contextmanager
+from dataclasses import dataclass
+from operator import itemgetter
+from typing import Callable, Iterator, Protocol, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
-from exporter_spark import planinfo
+from exporter_spark import fsio, planinfo
 from exporter_spark.plans.spec import ExportSpec
 
 
@@ -52,6 +64,35 @@ def jvm_str(s: str) -> str:
             "�" if "\ud800" <= ch <= "\udfff" else ch for ch in s
         )
     return s
+
+
+@dataclass(frozen=True)
+class Framing:
+    """A document with records is ``prologue + sep.join(records) +
+    epilogue``; a document with no records is ``empty``."""
+
+    prologue: str
+    sep: str
+    epilogue: str
+    empty: str = ""
+
+
+def splice_document(parts_dir: str, out_path: str, framing: Framing, spark=None) -> None:
+    """One document from a directory of record part files, through the
+    Hadoop FS API (part bytes never transit Python; any scheme).
+    Name-ordered parts preserve a global order_by's range partitioning.
+    The last part's final ``sep`` makes way for the epilogue."""
+    fsio.splice_parts(
+        parts_dir,
+        out_path,
+        prefix=framing.prologue,
+        suffix=framing.epilogue,
+        drop_last_bytes=len(framing.sep.encode("utf-8")),
+        spark=spark,
+    )
+    # splice_parts writes nothing when no part holds a record
+    if framing.empty and not fsio.file_len(out_path, spark):
+        fsio.write_text(out_path, framing.empty, spark)
 
 
 class Formatter(Protocol):
@@ -115,9 +156,30 @@ class BaseFormatter:
 
         return spread(df)
 
-    # -- fidelity path -------------------------------------------------------
-    def iter_chunks(self, df: DataFrame) -> Iterator[str]:  # pragma: no cover
+    # -- the format's description -----------------------------------------------
+    def framing(self, df: DataFrame) -> Framing:
+        raise NotImplementedError(
+            f"{type(self).__name__} has no single-stream text mode;"
+            " use write()/write_single_part()"
+        )
+
+    def records(self, df: DataFrame, partition_by: Sequence[str] = ()) -> DataFrame:
+        """The partition columns, then each row's record as ``value``."""
         raise NotImplementedError
+
+    def stream_rows(self, df: DataFrame) -> tuple[DataFrame, Callable[[Row], str]]:
+        """The fidelity stream's rows and each one's record."""
+        return self.records(df), itemgetter(0)
+
+    # -- fidelity path -------------------------------------------------------
+    def iter_chunks(self, df: DataFrame) -> Iterator[str]:
+        framing = self.framing(df)
+        rows, render = self.stream_rows(df)
+        lead, wrote = framing.prologue, False
+        for row in rows.toLocalIterator():
+            yield lead + render(row)
+            lead, wrote = framing.sep, True
+        yield framing.epilogue if wrote else framing.empty
 
     def format_string(self, df: DataFrame) -> str:
         return "".join(self.iter_chunks(df))
@@ -135,12 +197,30 @@ class BaseFormatter:
         partition_by: list[str] | None = None,
         *,
         _spread: bool = True,
-    ) -> None:  # pragma: no cover
-        """Concrete formatters accept keyword-only ``_spread=False``
-        (forwarded to ``_spread_unordered``) so ``write_single_part``
-        can disable the unordered-input spread without mutating shared
-        instance state."""
-        raise NotImplementedError
+    ) -> None:
+        """Distributed part files of the records. Keyword-only
+        ``_spread=False`` (forwarded to ``_spread_unordered``) lets
+        ``write_single_part`` disable the unordered-input spread
+        without mutating shared instance state."""
+        self._write_records(df, path, self.framing(df).sep, partition_by, spread=_spread)
+
+    def _write_records(
+        self,
+        df: DataFrame,
+        path: str,
+        sep: str,
+        partition_by: list[str] | None = None,
+        *,
+        spread: bool,
+    ) -> None:
+        """Text part files: every record followed by ``sep``. Hive-style
+        convention: partition columns ride in the directory name, not
+        the record (matches the native writers' partitionBy behavior)."""
+        records = self.records(self._spread_unordered(df, spread), partition_by or ())
+        writer = records.write.mode("overwrite").option("lineSep", sep)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.text(path)
 
     def write_single_part(self, df: DataFrame, path: str) -> None:
         """One output FILE via the distributed writer: coalesce(1),
@@ -150,17 +230,29 @@ class BaseFormatter:
         All IO through the Hadoop FS API, so scheme-qualified paths
         (file:, hdfs:, s3a:) work — driver-local glob would silently
         find nothing there."""
-        from exporter_spark import fsio
-
-        spark = df.sparkSession
-        tmp = path + "._spark_tmp"
-        try:
-            # _spread=False: the coalesce(1) IS the contract here — the
-            # unordered-input spread in the concrete write() would undo
-            # it (explicit parameter since r18; the previous mutable
-            # _spread_off instance flag raced under concurrent writes)
+        # _spread=False: the coalesce(1) IS the contract here — the
+        # unordered-input spread in the concrete write() would undo it
+        # (explicit parameter since r18; the previous mutable
+        # _spread_off instance flag raced under concurrent writes)
+        with _scratch(df, path + "._spark_tmp") as tmp:
             self.write(df.coalesce(1), tmp, _spread=False)
-            fsio.splice_parts(tmp, path, spark=spark)
-        finally:
-            fs, jpath = fsio._fs_path(spark, tmp)
-            fs.delete(jpath, True)
+            fsio.splice_parts(tmp, path, spark=df.sparkSession)
+
+    def _write_document(
+        self, df: DataFrame, path: str, framing: Framing, tmp: str, *, spread: bool
+    ) -> None:
+        """One document through the part-file driver."""
+        with _scratch(df, tmp):
+            self._write_records(df, tmp, framing.sep, spread=spread)
+            splice_document(tmp, path, framing, df.sparkSession)
+
+
+@contextmanager
+def _scratch(df: DataFrame, tmp: str) -> Iterator[str]:
+    """``tmp`` for the block, deleted afterwards: a failed distributed
+    write (a NaN double raises in json_line_expr) must not leak it."""
+    try:
+        yield tmp
+    finally:
+        fs, jpath = fsio._fs_path(df.sparkSession, tmp)
+        fs.delete(jpath, True)

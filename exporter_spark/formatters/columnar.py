@@ -34,12 +34,6 @@ class _ColumnarFormatter(BaseFormatter):
         super().__init__(spec)
         self.compression = compression
 
-    def iter_chunks(self, df: DataFrame):
-        raise NotImplementedError(
-            f"{self.FORMAT} is a binary columnar format with no single-"
-            "stream text mode; use write()/write_single_part()"
-        )
-
     def write(
         self,
         df: DataFrame,

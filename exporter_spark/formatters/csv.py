@@ -8,20 +8,20 @@ Scale path: the display-string projection plus ``df.write.csv`` — the
 whole pipeline (format expressions included) stays inside whole-stage
 codegen and writes partition-parallel part files.
 
-Fidelity path: Go ``encoding/csv`` quoting re-implemented exactly
-(quotes when the field contains the delimiter, a quote, CR/LF, or
-*begins with any unicode.IsSpace rune* — the leading-whitespace rule
-is a Go quirk Python's csv module does not share).
+Record: Go ``encoding/csv`` quoting re-implemented exactly (quotes
+when the field contains the delimiter, a quote, CR/LF, or *begins with
+any unicode.IsSpace rune* — the leading-whitespace rule is a Go quirk
+Python's csv module does not share).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from exporter_spark.formatters.base import BaseFormatter, jvm_str, qcol
+from exporter_spark.formatters.base import BaseFormatter, Framing, jvm_str, qcol
 
 # Go unicode.IsSpace set (encoding/csv fieldNeedsQuotes quotes a field
 # whose FIRST rune is any of these — not just space/tab):
@@ -78,43 +78,51 @@ def _go_csv_field(s: str, delimiter: str) -> str:
     return '"' + s.replace('"', '""') + '"'
 
 
+def csv_writer_options(spec) -> dict[str, str]:
+    """The option set of Spark's CSV writer, for the batch
+    ``DataFrameWriter`` and the streaming ``DataStreamWriter`` alike."""
+    return {
+        "header": str(spec.header).lower(),
+        "sep": spec.delimiter,
+        "nullValue": spec.resolved_null(""),
+        "emptyValue": "",
+        # escape = quote char ⇒ RFC-4180 quote doubling, matching Go
+        # encoding/csv and our fidelity path (Spark's default
+        # backslash-escape would write "\"" instead of "\"\"")
+        "quote": '"',
+        "escape": '"',
+        # Spark's WRITE defaults trim unquoted fields — that is silent
+        # data corruption, never acceptable
+        "ignoreLeadingWhiteSpace": "false",
+        "ignoreTrailingWhiteSpace": "false",
+        "lineSep": "\r\n" if spec.crlf else "\n",
+    }
+
+
 class CSVFormatter(BaseFormatter):
     def __init__(self, spec=None, *, go_quoting: bool = False):
         super().__init__(spec)
         self.go_quoting = go_quoting
 
-    def _line_end(self) -> str:
-        return "\r\n" if self.spec.crlf else "\n"
-
-    def _row(self, cells: list[str]) -> str:
-        d = self.spec.delimiter
-        return d.join(_go_csv_field(c, d) for c in cells) + self._line_end()
-
-    # -- fidelity path ---------------------------------------------------------
-    def iter_chunks(self, df: DataFrame) -> Iterator[str]:
+    def framing(self, df: DataFrame) -> Framing:
         spec = self.spec
-        header = spec.header_names(df)
-        out = spec.compile(df)
+        end, d = "\r\n" if spec.crlf else "\n", spec.delimiter
+        header = ""
+        if spec.header:
+            header = d.join(_go_csv_field(c, d) for c in spec.header_names(df)) + end
+        # eager header (codec/csv/csv.go:147-151), or lazy: only once a
+        # surviving row exists (:175-179)
+        return Framing(header, end, end, header if spec.header_when_no_data else "")
+
+    def records(self, df: DataFrame, partition_by: Sequence[str] = ()) -> DataFrame:
         # record strings are assembled JVM-side (codegen) — the driver
         # only concatenates; quoting parity with Go encoding/csv is in
         # csv_field_expr / _go_csv_field (same rules, two dialects)
-        lines = out.select(
-            csv_line_expr(
-                out.columns, spec.delimiter, spec.resolved_null("")
-            ).alias("__line__")
-        )
-        end = self._line_end()
-        wrote_header = False
-        if spec.header and spec.header_when_no_data:
-            # eager header (codec/csv/csv.go:147-151)
-            yield self._row(header)
-            wrote_header = True
-        for row in lines.toLocalIterator():
-            if spec.header and not wrote_header:
-                # lazy header: only once a surviving row exists (:175-179)
-                yield self._row(header)
-                wrote_header = True
-            yield row["__line__"] + end
+        spec = self.spec
+        out = spec.compile(df)
+        cols = [c for c in out.columns if c not in partition_by]
+        line = csv_line_expr(cols, spec.delimiter, spec.resolved_null(""))
+        return out.select(*[qcol(c) for c in partition_by], line.alias("value"))
 
     # -- scale path --------------------------------------------------------------
     def write(
@@ -122,7 +130,6 @@ class CSVFormatter(BaseFormatter):
         df: DataFrame,
         path: str,
         partition_by: list[str] | None = None,
-        go_quoting: bool | None = None,
         *,
         _spread: bool = True,
     ) -> None:
@@ -136,50 +143,20 @@ class CSVFormatter(BaseFormatter):
           extra quote triggers (leading IsSpace rune, lone ``\\.``)
           do not fire here, so bytes can differ from the fidelity
           stream on such fields while VALUES round-trip identically.
-        * ``go_quoting=True`` (here or on the constructor): bare
-          records via the SAME ``csv_line_expr`` as the fidelity path
-          through the text writer — byte-identical records including
-          the Go quoting quirks; parts carry no header (splice one in
-          on assembly, as write_single_part cannot — use the default
-          path when per-part headers matter)."""
+        * ``go_quoting=True`` on the constructor: bare records via the
+          SAME ``csv_line_expr`` as the fidelity path through the text
+          writer — byte-identical records including the Go quoting
+          quirks; parts carry no header (splice one in on assembly, as
+          write_single_part cannot — use the default path when
+          per-part headers matter)."""
+        if self.go_quoting:
+            return super().write(df, path, partition_by, _spread=_spread)
         spec = self.spec
-        out = spec.compile(self._spread_unordered(df, _spread))
-        use_go = self.go_quoting if go_quoting is None else go_quoting
-        if use_go:
-            # hive-style convention: partition columns ride in the
-            # directory name, not the record (matches the native path)
-            cols = [c for c in out.columns if c not in (partition_by or [])]
-            line = csv_line_expr(cols, spec.delimiter, spec.resolved_null(""))
-            if spec.crlf:
-                line = F.concat(line, F.lit("\r"))  # text writer adds \n
-            writer = (
-                out.select(*[qcol(c) for c in (partition_by or [])], line.alias("value"))
-                .write.mode("overwrite")
-            )
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.text(path)
-            return
+        df = self._spread_unordered(df, _spread)
+        out = spec.compile(df)
         if spec.custom_header is not None:
             out = out.toDF(*spec.header_names(df))
         writer = out.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        (
-            writer
-            .option("header", str(spec.header).lower())
-            .option("sep", spec.delimiter)
-            .option("nullValue", spec.resolved_null(""))
-            .option("emptyValue", "")
-            # escape = quote char ⇒ RFC-4180 quote doubling, matching
-            # Go encoding/csv and our fidelity path (Spark's default
-            # backslash-escape would write "\"" instead of "\"\"")
-            .option("quote", '"')
-            .option("escape", '"')
-            # Spark's WRITE defaults trim unquoted fields — that is
-            # silent data corruption, never acceptable
-            .option("ignoreLeadingWhiteSpace", "false")
-            .option("ignoreTrailingWhiteSpace", "false")
-            .option("lineSep", "\r\n" if spec.crlf else "\n")
-            .csv(path)
-        )
+        writer.options(**csv_writer_options(spec)).csv(path)

@@ -10,22 +10,21 @@ The template below is our own; it reproduces the reference's
 *structure* (doc skeleton, sticky thead, name+type header cells, null
 span), not its bytes.
 
-Fidelity path builds each ``<tr>`` as a single Catalyst concat
-expression (JVM-side), streaming only assembled row strings to the
-driver. Scale path writes the ``<tr>`` strings as text part files plus
-``_header.html`` / ``_footer.html`` companions so a downstream cat can
-assemble the document without re-reading data.
+Record: each ``<tr>`` is a single Catalyst concat expression
+(JVM-side). Scale path writes the ``<tr>`` strings as text part files
+plus ``_header.html`` / ``_footer.html`` companions so a downstream cat
+can assemble the document without re-reading data.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from exporter_spark import fsio
-from exporter_spark.formatters.base import BaseFormatter, qcol
+from exporter_spark.formatters.base import BaseFormatter, Framing, qcol, splice_document
 
 NULL_SPAN = '<span style="color:#aaaaaa;">[NULL]</span>'
 
@@ -60,15 +59,16 @@ def html_row_expr(cols: list[str], null_s: str = NULL_SPAN) -> Column:
 
 
 class HTMLFormatter(BaseFormatter):
-    def _head(self, names: list[str], types: list[str]) -> str:
+    def _head(self, df: DataFrame) -> str:
         """Document skeleton; the <thead> block only when the spec asks
         for a header (reference honors writeHeader — html.go:146-151;
         the skeleton itself is always needed for a standalone doc)."""
         thead = ""
         if self.spec.header:
+            types = [f.dataType.simpleString() for f in df.schema.fields]
             cells = "".join(
                 f"<th>{n}<br/><small>{t.lower()}</small></th>"
-                for n, t in zip(names, types)
+                for n, t in zip(self.spec.header_names(df), types)
             )
             thead = "<thead>\n<tr>" + cells + "</tr>\n</thead>\n"
         return (
@@ -81,35 +81,24 @@ class HTMLFormatter(BaseFormatter):
 
     _FOOT = "</tbody>\n</table>\n</body>\n</html>\n"
 
-    def _null_rendering(self) -> str:
+    def _framing(self, head: str, foot: str) -> Framing:
+        # the skeleton is eager by default; lazy header
+        # (with_header_when_no_data(False), html.go:146-157): zero data
+        # rows ⇒ empty output with no document skeleton
+        return Framing(
+            head, "\n", "\n" + foot, head + foot if self.spec.header_when_no_data else ""
+        )
+
+    def framing(self, df: DataFrame) -> Framing:
+        return self._framing(self._head(df), self._FOOT)
+
+    def records(self, df: DataFrame, partition_by: Sequence[str] = ()) -> DataFrame:
+        if partition_by:
+            raise ValueError("HTML sink does not support partitioned layout")
+        out = self.spec.compile(df)
         # WithCustomNULL (html.go:74-78); default is the gray span
-        return self.spec.resolved_null(NULL_SPAN)
-
-    def _row_expr(self, cols: list[str]) -> Column:
-        return html_row_expr(cols, self._null_rendering()).alias("__tr__")
-
-    def _header_parts(self, df: DataFrame) -> tuple[list[str], list[str]]:
-        names = self.spec.header_names(df)
-        types = [f.dataType.simpleString() for f in df.schema.fields]
-        return names, types
-
-    # -- fidelity path ---------------------------------------------------------
-    def iter_chunks(self, df: DataFrame) -> Iterator[str]:
-        spec = self.spec
-        names, types = self._header_parts(df)
-        out = spec.compile(df)
-        rows = out.select(self._row_expr(out.columns))
-        opened = False
-        if spec.header_when_no_data:
-            yield self._head(names, types)
-            opened = True
-        for row in rows.toLocalIterator():
-            if not opened:
-                yield self._head(names, types)  # lazy header (html.go:146-157)
-                opened = True
-            yield row["__tr__"] + "\n"
-        if opened:
-            yield self._FOOT
+        null_s = self.spec.resolved_null(NULL_SPAN)
+        return out.select(html_row_expr(out.columns, null_s).alias("value"))
 
     # -- scale path --------------------------------------------------------------
     def write(
@@ -120,71 +109,25 @@ class HTMLFormatter(BaseFormatter):
         *,
         _spread: bool = True,
     ) -> None:
-        if partition_by:
-            raise ValueError("HTML sink does not support partitioned layout")
-        spec = self.spec
-        names, types = self._header_parts(df)
-        out = spec.compile(self._spread_unordered(df, _spread))
-        rows = out.select(self._row_expr(out.columns).alias("value"))
-        rows.write.mode("overwrite").text(path)
+        super().write(df, path, partition_by, _spread=_spread)
         # sidecars via the Hadoop FS API — lands next to the parts on
         # any scheme (file:, hdfs:, s3a:), not just the driver's disk
         spark = df.sparkSession
-        fsio.write_text(f"{path}/_header.html", self._head(names, types), spark)
+        fsio.write_text(f"{path}/_header.html", self._head(df), spark)
         fsio.write_text(f"{path}/_footer.html", self._FOOT, spark)
 
     def write_single_part(self, df: DataFrame, path: str) -> None:
-        """One complete HTML DOCUMENT. The base implementation would
-        promote only the rows part and delete the skeleton sidecars —
-        HTML's framing lives in _header.html/_footer.html, so the
-        single-file form must assemble, honoring the lazy-header
-        empty rule."""
-        from exporter_spark import fsio
-
-        spark = df.sparkSession
-        tmp = path + "._spark_tmp"
-        try:
-            # _spread=False: the coalesce(1) IS the contract (base.py)
-            self.write(df.coalesce(1), tmp, _spread=False)
-            self.assemble(tmp, path, spark)
-        finally:
-            fs, jpath = fsio._fs_path(spark, tmp)
-            fs.delete(jpath, True)
+        """One complete HTML DOCUMENT: the rows' part files spliced
+        inside the skeleton, honoring the lazy-header empty rule. No
+        input spread, so name-ordered parts keep the input's row
+        order."""
+        self._write_document(df, path, self.framing(df), path + "._spark_tmp", spread=False)
 
     def assemble(self, parts_dir: str, out_file: str, spark=None) -> None:
-        """Splice a ``write`` directory into one document, honoring
-        the spec's lazy-header rule for empty results."""
-        assemble_html(
-            parts_dir,
-            out_file,
-            spark,
-            skip_when_empty=not self.spec.header_when_no_data,
-        )
-
-
-def assemble_html(
-    parts_dir: str, out_file: str, spark=None, *, skip_when_empty: bool = False
-) -> None:
-    """Concatenate a distributed HTML write (header + row part files +
-    footer) into one document without re-reading the data. All IO via
-    the Hadoop FS API — part bytes are spliced JVM-side and never
-    transit Python.
-
-    ``skip_when_empty=True`` reproduces the lazy-header rule
-    (``with_header_when_no_data(False)``, html.go:146-157): zero data
-    rows ⇒ empty output with no document skeleton. Prefer
-    ``HTMLFormatter.assemble``, which wires this from the spec."""
-    parts = fsio.list_parts(parts_dir, spark)
-    # text-writer parts are empty iff they hold zero rows, so a
-    # length probe suffices — no part bytes transit Python
-    if skip_when_empty and not any(fsio.file_len(p, spark) for p in parts):
-        fsio.write_text(out_file, "", spark)
-        return
-    pieces: list[tuple[str, str]] = []
-    if fsio.exists(f"{parts_dir}/_header.html", spark):
-        pieces.append(("file", f"{parts_dir}/_header.html"))
-    for part in parts:
-        pieces.append(("file", part))
-    if fsio.exists(f"{parts_dir}/_footer.html", spark):
-        pieces.append(("file", f"{parts_dir}/_footer.html"))
-    fsio.concat_files(out_file, pieces, spark)
+        """Splice a ``write`` directory into one document without
+        re-reading the data: the sidecars are its prologue and
+        epilogue, and the spec's lazy-header rule decides an empty
+        result."""
+        head = fsio.read_text(f"{parts_dir}/_header.html", spark)
+        foot = fsio.read_text(f"{parts_dir}/_footer.html", spark)
+        splice_document(parts_dir, out_file, self._framing(head, foot), spark)

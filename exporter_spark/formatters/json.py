@@ -19,14 +19,17 @@ from __future__ import annotations
 import datetime as dt
 import json
 import math
-from typing import Iterator
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-from exporter_spark import fsio
-from exporter_spark.formatters.base import BaseFormatter, qcol
+from exporter_spark.formatters.base import BaseFormatter, Framing, qcol
 from exporter_spark.functions.tostring import _go_fixed_repr
+
+# empty result ⇒ empty output, not "[]" (json.go:94-98)
+_NDJSON = Framing("", "\n", "\n")
+_ARRAY = Framing("[\n", ",\n", "\n]\n")
 
 
 def _rfc3339nano_py(v: dt.datetime) -> str:
@@ -80,33 +83,6 @@ def _json_token(v) -> str:
     if hasattr(v, "asDict"):  # pyspark Row
         return _json_token(v.asDict(recursive=False))
     return json.dumps(str(v), ensure_ascii=False)
-
-
-def assemble_json_array(parts_dir: str, out_file: str, spark=None) -> None:
-    """Concatenate a distributed NDJSON write into the reference's
-    array framing ('[' with first row, ',\\n' separators, ']\\n'
-    close, empty ⇒ empty file) without re-reading through Spark.
-
-    All IO via the Hadoop FS API (works against hdfs:/s3a: paths, not
-    just the driver's disk). Each part's text is transformed in the
-    driver one part at a time — parts are bounded by the write's
-    partition sizing, and single-document assembly is inherently a
-    one-stream step (the array format has no parallel form)."""
-    def pieces():
-        # generator: one part's text in memory at a time (concat_files
-        # consumes lazily), not the whole document
-        first = True
-        for part in fsio.list_parts(parts_dir, spark):
-            body = fsio.read_text(part, spark).rstrip("\n")
-            if not body:
-                continue
-            rows = "\n".join(l for l in body.split("\n") if l)
-            yield ("text", ("[\n" if first else ",\n") + rows.replace("\n", ",\n"))
-            first = False
-        if not first:
-            yield ("text", "\n]\n")
-
-    fsio.concat_files(out_file, pieces(), spark)
 
 
 def _json_fragment(col, dt):
@@ -205,7 +181,7 @@ def _json_fragment(col, dt):
 
 def json_line_expr(schema, cols: list[str]):
     """One NDJSON object per row as a single Catalyst expression —
-    the executor-side twin of ``JSONFormatter._obj`` (same bytes,
+    the executor-side twin of ``JSONFormatter.stream_rows`` (same bytes,
     serialized in parallel instead of on the driver)."""
     by_name = {f.name: f.dataType for f in schema.fields}
     if not cols:
@@ -223,7 +199,7 @@ def _render_temporals(out: DataFrame) -> DataFrame:
     """Timestamps must serialize as RFC3339Nano with TRIMMED fractional
     zeros (Go time.Time marshaling). Rendering happens JVM-side, under
     the session timezone (UTC), BEFORE any collection — the fidelity
-    path's toLocalIterator would otherwise deserialize through the
+    stream's row collection would otherwise deserialize through the
     driver's OS-local timezone and shift instants on non-UTC drivers;
     the distributed writer has no trimming timestampFormat at all.
     Both paths share this projection, so they stay byte-identical."""
@@ -285,34 +261,27 @@ class JSONFormatter(BaseFormatter):
             *[cols[i] for i in keep]
         )
 
-    def _obj(self, row, names: list[str], prefixes: list[str]) -> str:
-        return (
-            "{"
-            + ",".join(
-                p + _json_token(row[c]) for p, c in zip(prefixes, names)
-            )
-            + "}"
-        )
+    def framing(self, df: DataFrame) -> Framing:
+        return _NDJSON if self.spec.newline_delimited else _ARRAY
 
-    # -- fidelity path ---------------------------------------------------------
-    def iter_chunks(self, df: DataFrame) -> Iterator[str]:
+    def records(self, df: DataFrame, partition_by: Sequence[str] = ()) -> DataFrame:
+        out = self._dedup_columns(self.spec.compile_raw(df))
+        cols = sorted(out.columns) if self.spec.sort_keys else out.columns
+        line = json_line_expr(out.schema, [c for c in cols if c not in partition_by])
+        return out.select(*[qcol(c) for c in partition_by], line.alias("value"))
+
+    def stream_rows(self, df: DataFrame) -> tuple[DataFrame, Callable[[Row], str]]:
+        """The fidelity stream renders each raw row on the driver with
+        ``_json_token``, not with ``json_line_expr``: that expression
+        renders top-level doubles through the go-float pandas UDF, and
+        a small export would pay the Python workers' start-up for it."""
         spec = self.spec
         out = _render_temporals(self._dedup_columns(spec.compile_raw(df)))
         # key order and the '"name":' prefixes are row-invariant —
         # computed once, not per row of the single-stream loop
         names = sorted(out.columns) if spec.sort_keys else out.columns
-        prefixes = [json.dumps(c, ensure_ascii=False) + ":" for c in names]
-        first = True
-        for row in out.toLocalIterator():
-            obj = self._obj(row, names, prefixes)
-            if spec.newline_delimited:
-                yield obj + "\n"
-            else:
-                yield ("[\n" if first else ",\n") + obj
-                first = False
-        if not spec.newline_delimited and not first:
-            yield "\n]\n"
-        # empty result ⇒ empty output, not "[]" (json.go:94-98)
+        keys = [(json.dumps(c, ensure_ascii=False) + ":", c) for c in names]
+        return out, lambda row: "{" + ",".join(k + _json_token(row[c]) for k, c in keys) + "}"
 
     # -- scale path --------------------------------------------------------------
     def write(
@@ -324,9 +293,9 @@ class JSONFormatter(BaseFormatter):
         _spread: bool = True,
     ) -> None:
         """Distributed NDJSON via the native writer. Array framing is a
-        single-stream format by construction; for scale we still write
-        NDJSON part files (callers needing one array concatenate with
-        the fidelity path)."""
+        single-document format by construction; for scale we still
+        write NDJSON part files (``write_array_file`` gives one array
+        document)."""
         spec = self.spec
         out = _render_temporals(
             self._dedup_columns(spec.compile_raw(self._spread_unordered(df, _spread)))
@@ -358,13 +327,6 @@ class JSONFormatter(BaseFormatter):
         (tested); the fidelity path serializes every row on the
         driver, here the driver only splices bytes.
 
-        Splice trick: every record is written as ``\\nobj`` with the
-        text writer's line separator set to ``,`` — so the document is
-        ``[`` + (all parts, byte-concatenated JVM-side, minus the
-        final trailing comma) + ``\\n]\\n``. Part bytes never transit
-        Python (a 132 MB sf0.1 lineitem assembly previously spent most
-        of its time round-tripping text through py4j).
-
         ROW-ORDER CONTRACT: with an ``order_by`` the document's row
         order is the spec's order, byte-identical to the fidelity
         stream (name-ordered parts preserve the range partitioning).
@@ -377,26 +339,4 @@ class JSONFormatter(BaseFormatter):
         on a distributed engine 'input order' of an unordered frame is
         not a stable notion to preserve in the first place."""
         tmp = tmp_dir or out_file + "._spark_parts"
-        spark = df.sparkSession
-        spec = self.spec
-        out = self._dedup_columns(spec.compile_raw(self._spread_unordered(df)))
-        cols = sorted(out.columns) if spec.sort_keys else out.columns
-        lines = out.select(
-            F.concat(F.lit("\n"), json_line_expr(out.schema, cols)).alias("value")
-        )
-        try:
-            # inside the cleanup scope: a failed distributed write (a
-            # NaN double raises in json_line_expr) must not leak the
-            # tmp parts directory
-            lines.write.mode("overwrite").option("lineSep", ",").text(tmp)
-            fsio.splice_parts(
-                tmp,
-                out_file,
-                prefix="[",
-                suffix="\n]\n",
-                drop_last_bytes=1,  # the final record's trailing ","
-                spark=spark,
-            )
-        finally:
-            fs, jpath = fsio._fs_path(spark, tmp)
-            fs.delete(jpath, True)
+        self._write_document(df, out_file, _ARRAY, tmp, spread=True)

@@ -8,20 +8,20 @@ column names (the reference does not sanitize — xml.go:116-119 — we
 keep that behavior on the fidelity path and document that the scale
 path, Spark's native XML writer, sanitizes).
 
-Fidelity path: the entire row string is built as ONE Catalyst
-expression (concat of per-column fragments), so escaping and framing
-run JVM-side inside codegen; the driver only concatenates chunks.
+Record: the entire row string is built as ONE Catalyst expression
+(concat of per-column fragments), so escaping runs JVM-side inside
+codegen, on the fidelity stream and the part files alike.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from exporter_spark.formatters.base import BaseFormatter, jvm_str, qcol
+from exporter_spark.formatters.base import BaseFormatter, Framing, jvm_str, qcol
 
 _DECLARATION = '<?xml version="1.0" encoding="UTF-8"?>\n'
 
@@ -104,7 +104,7 @@ def xml_row_expr(
             )
         )
     parts.append(F.lit(f"</{row_tag}>"))
-    return F.concat(*parts).alias("__xml__")
+    return F.concat(*parts)
 
 
 # Display strings of these source types are drawn from
@@ -146,29 +146,26 @@ class XMLFormatter(BaseFormatter):
             and spec._mapper_for(fld) is None
         )
 
-    def _row_expr(
-        self, cols: list[str], tags: list[str], escape_safe: frozenset[str] = frozenset()
-    ) -> Column:
-        return xml_row_expr(cols, tags, self.spec.row_tag, escape_safe)
+    def framing(self, df: DataFrame) -> Framing:
+        spec = self.spec
+        # declaration and root only once a row exists: empty input /
+        # limit=0 ⇒ no output at all (xml.go:68-70)
+        return Framing(
+            (_DECLARATION if spec.declaration else "") + f"<{spec.root_tag}>\n",
+            "\n",
+            f"\n</{spec.root_tag}>\n",
+        )
 
-    # -- fidelity path ---------------------------------------------------------
-    def iter_chunks(self, df: DataFrame) -> Iterator[str]:
+    def records(self, df: DataFrame, partition_by: Sequence[str] = ()) -> DataFrame:
         spec = self.spec
         safe = self._escape_safe(df)
         out = spec.compile(df)
         tags = spec.header_names(out)
-        rows = out.select(self._row_expr(out.columns, tags, safe))
-        opened = False
-        for row in rows.toLocalIterator():
-            if not opened:
-                if spec.declaration:
-                    yield _DECLARATION
-                yield f"<{spec.root_tag}>\n"
-                opened = True
-            yield row["__xml__"] + "\n"
-        if opened:
-            yield f"</{spec.root_tag}>\n"
-        # empty input / limit=0 ⇒ no output at all (xml.go:68-70)
+        # hive-style convention: partition columns ride in the
+        # directory name, not the row body
+        keep = [(c, t) for c, t in zip(out.columns, tags) if c not in partition_by]
+        row = xml_row_expr([c for c, _ in keep], [t for _, t in keep], spec.row_tag, safe)
+        return out.select(*[qcol(c) for c in partition_by], row.alias("value"))
 
     # -- scale path --------------------------------------------------------------
     def write(
@@ -176,7 +173,6 @@ class XMLFormatter(BaseFormatter):
         df: DataFrame,
         path: str,
         partition_by: list[str] | None = None,
-        documents: bool | None = None,
         *,
         _spread: bool = True,
     ) -> None:
@@ -190,36 +186,17 @@ class XMLFormatter(BaseFormatter):
           concatenate (with declaration + root wrapper) into one
           document byte-identical to the fidelity stream. Each part
           alone is a fragment, not a well-formed doc.
-        * ``documents=True`` (here or on the constructor): the Spark
-          XML data source writer — every part is a well-formed document
+        * ``documents=True`` on the constructor: the Spark XML data
+          source writer — every part is a well-formed document
           (declaration + root), independently parseable by any XML
           tooling and ``spark.read.format("xml")``. Costs ~2x the
           stream path (per-field StAX calls, no codegen).
         """
+        if not self.documents:
+            return super().write(df, path, partition_by, _spread=_spread)
         spec = self.spec
-        safe = self._escape_safe(df)
-        out = spec.compile(self._spread_unordered(df, _spread))
-        use_documents = self.documents if documents is None else documents
-        if not use_documents:
-            tags = spec.header_names(out)
-            # hive-style convention: partition columns ride in the
-            # directory name, not the row body (matches the native
-            # writers' partitionBy behavior)
-            keep = [
-                (c, t)
-                for c, t in zip(out.columns, tags)
-                if c not in (partition_by or [])
-            ]
-            value = self._row_expr(
-                [c for c, _ in keep], [t for _, t in keep], safe
-            ).alias("value")
-            writer = out.select(
-                *[qcol(c) for c in (partition_by or [])], value
-            ).write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.text(path)
-            return
+        df = self._spread_unordered(df, _spread)
+        out = spec.compile(df)
         if spec.custom_header is not None:
             out = out.toDF(*spec.header_names(df))
         writer = out.write.mode("overwrite")
@@ -240,34 +217,10 @@ class XMLFormatter(BaseFormatter):
         )
 
     def write_single_part(self, df: DataFrame, path: str) -> None:
-        """One complete XML document, formatted executor-side via the
-        fast row-stream path, then wrapped with declaration + root on
-        assembly — byte-identical to the fidelity path's framing.
-        Parts splice JVM-side through the Hadoop FileSystem API
-        (object-store safe, like the JSON array and HTML assemblers;
-        name-ordered parts preserve a global order_by). Empty input ⇒
-        empty file (xml.go:68-70 emits nothing)."""
-        from exporter_spark import fsio
-
-        spark = df.sparkSession
-        spec = self.spec
-        tmp_dir = path + "._spark_tmp"
-        try:
-            # _spread=False (r18, ADVICE r17): the contract here is ONE
-            # document whose name-ordered parts reconstruct the input's
-            # row order (order_by-ranged or unshuffled-source) — the
-            # unordered round-robin spread would silently permute it,
-            # diverging from the fidelity stream. Unlike base/HTML this
-            # path does not coalesce(1), so the flag is the only guard.
-            self.write(df, tmp_dir, documents=False, _spread=False)
-            prefix = (_DECLARATION if spec.declaration else "") + f"<{spec.root_tag}>\n"
-            fsio.splice_parts(
-                tmp_dir,
-                path,
-                prefix=prefix,
-                suffix=f"</{spec.root_tag}>\n",
-                spark=spark,
-            )
-        finally:
-            fs, jpath = fsio._fs_path(spark, tmp_dir)
-            fs.delete(jpath, True)
+        """One complete XML document, whatever the sink shape: the row
+        stream's part files spliced inside the framing, byte-identical
+        to the fidelity stream. No input spread: the contract is ONE
+        document whose name-ordered parts reconstruct the input's row
+        order (order_by-ranged or unshuffled-source) — the unordered
+        round-robin spread would silently permute it."""
+        self._write_document(df, path, self.framing(df), path + "._spark_tmp", spread=False)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from exporter_spark.formatters.base import BaseFormatter
+from exporter_spark.formatters.csv import csv_writer_options
 from exporter_spark.functions.tostring import display_columns
 from exporter_spark.plans.spec import ExportSpec
 
@@ -80,23 +81,8 @@ def stream_export(
         out = out.toDF(*spec.header_names(df))
     writer = out.writeStream.format(fmt).outputMode("append")
     if fmt == "csv":
-        writer = (
-            writer.option("header", str(spec.header).lower())
-            .option("sep", spec.delimiter)
-            .option("nullValue", spec.resolved_null(""))
-            .option("emptyValue", "")
-            # escape = quote ⇒ RFC-4180 quote doubling, same as the
-            # batch writer and the Go fidelity path (default backslash
-            # escaping would diverge on fields containing quotes)
-            .option("quote", '"')
-            .option("escape", '"')
-            # Spark's write DEFAULT trims whitespace from unquoted
-            # fields — silent data corruption, never acceptable (same
-            # stance as the batch writer, formatters/csv.py)
-            .option("ignoreLeadingWhiteSpace", "false")
-            .option("ignoreTrailingWhiteSpace", "false")
-            .option("lineSep", "\r\n" if spec.crlf else "\n")
-        )
+        # the batch writer's option set, the whitespace-trim guard in it
+        writer = writer.options(**csv_writer_options(spec))
     elif fmt == "json":
         # display-string cells are the documented streaming design
         # (module docstring), but NULL cells must still serialize as

@@ -2,12 +2,17 @@
 
 from __future__ import annotations
 
+import dataclasses
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from exporter_spark import Exporter, ExportSpec
+from exporter_spark.formatters.html import HTMLFormatter
+from exporter_spark.formatters.json import JSONFormatter
+from exporter_spark.formatters.xml import XMLFormatter
 from exporter_spark.operators import dedup
 from exporter_spark.sources.files import load_table
 
@@ -78,34 +83,9 @@ def test_simhash_udf_matches_sql_expr(spark, sf_dir):
     assert all(r["sql_fp"] == r["udf_fp"] for r in rows)
 
 
-def test_xml_single_part_matches_fidelity(spark, sf_dir, tmp_path):
-    """XML single-part (executor-formatted row stream + wrapper) must
-    be byte-identical to the driver-streamed fidelity document."""
-    from exporter_spark.formatters.xml import XMLFormatter
-
-    e = load_table(spark, sf_dir, "events").limit(25)
-    spec = ExportSpec().with_order_by("event_id")
-    fmt = XMLFormatter(spec)
-    target = str(tmp_path / "events.xml")
-    fmt.write_single_part(e, target)
-    assert open(target, encoding="utf-8").read() == fmt.format_string(e)
-
-
-def test_xml_single_part_empty(spark, sf_dir, tmp_path):
-    """Empty input ⇒ empty file, matching the fidelity path's
-    no-output behavior (xml.go:68-70)."""
-    from exporter_spark.formatters.xml import XMLFormatter
-
-    e = load_table(spark, sf_dir, "events").limit(0)
-    target = str(tmp_path / "empty.xml")
-    XMLFormatter(ExportSpec()).write_single_part(e, target)
-    assert os.path.getsize(target) == 0
-
-
 def test_xml_stream_parts_concat(spark, sf_dir, tmp_path):
     """Default scale path: concatenated parts + wrapper == the full
     document body (rows come from the same Catalyst expression)."""
-    from exporter_spark.formatters.xml import XMLFormatter
 
     e = load_table(spark, sf_dir, "events").limit(40)
     out = str(tmp_path / "xml_stream")
@@ -123,7 +103,6 @@ def test_json_array_file_matches_fidelity(spark, sf_dir, tmp_path):
     """Distributed array assembly (executor NDJSON parts + driver
     splice) must be byte-identical to the driver-streamed fidelity
     array document."""
-    from exporter_spark.formatters.json import JSONFormatter
 
     e = load_table(spark, sf_dir, "events").limit(120)
     spec = ExportSpec().with_order_by("event_id")
@@ -140,21 +119,59 @@ def test_json_array_file_matches_fidelity(spark, sf_dir, tmp_path):
     assert open(empty_target).read() == ""
 
 
-def test_html_sidecars_on_hadoop_scheme(spark, sf_dir, tmp_path):
-    """HTML scale path + assembly through explicit file:-scheme Hadoop
-    paths (the object-store-safe route): assembled document equals the
-    fidelity stream."""
-    from exporter_spark.formatters.html import HTMLFormatter, assemble_html
+def _single_part(fmt, df, target):
+    fmt.write_single_part(df, target)
 
-    e = load_table(spark, sf_dir, "events").limit(30)
-    spec = ExportSpec().with_order_by("event_id")
-    parts = "file://" + str(tmp_path / "html_parts")
-    fmt = HTMLFormatter(spec)
-    fmt.write(e, parts)
-    assembled = "file://" + str(tmp_path / "all.html")
-    assemble_html(parts, assembled, spark)
-    got = open(str(tmp_path / "all.html"), encoding="utf-8").read()
+
+def _write_and_assemble(fmt, df, target):
+    fmt.write(df, target + ".parts")
+    fmt.assemble(target + ".parts", target, df.sparkSession)
+
+
+# case: (formatter class, constructor options, spec fields, writer)
+SINGLE_DOCUMENT_CASES = {
+    "json_array": (JSONFormatter, {}, {}, lambda f, df, t: f.write_array_file(df, t)),
+    "xml": (XMLFormatter, {}, {}, _single_part),
+    "xml_no_declaration": (XMLFormatter, {}, {"declaration": False}, _single_part),
+    "xml_documents": (XMLFormatter, {"documents": True}, {}, _single_part),
+    "html_assemble": (HTMLFormatter, {}, {}, _write_and_assemble),
+    "html_single_part": (HTMLFormatter, {}, {}, _single_part),
+    "html_no_header_assemble": (HTMLFormatter, {}, {"header": False}, _write_and_assemble),
+    "html_no_header_single_part": (HTMLFormatter, {}, {"header": False}, _single_part),
+    "html_lazy_assemble": (
+        HTMLFormatter, {}, {"header_when_no_data": False}, _write_and_assemble
+    ),
+    "html_lazy_single_part": (
+        HTMLFormatter, {}, {"header_when_no_data": False}, _single_part
+    ),
+}
+RECORD_MARKER = {JSONFormatter: '{"', XMLFormatter: "<row>", HTMLFormatter: "<tr><td>"}
+
+
+@pytest.mark.parametrize("rows", [0, 1, 3])
+@pytest.mark.parametrize("case", list(SINGLE_DOCUMENT_CASES))
+def test_single_document_matches_fidelity(spark, sf_dir, tmp_path, case, rows):
+    """Every single-document writer — executor-written records spliced
+    inside the format's framing — is byte-identical to the fidelity
+    stream: the empty rule at 0 rows (XML and JSON: nothing; HTML: the
+    skeleton unless the header is lazy), the last part's separator
+    dropped on a lone part at 1 row, separators between rows at 3. All
+    IO through explicit file:-scheme Hadoop paths (the object-store-safe
+    route), and no tmp parts directory is left behind."""
+    cls, options, fields, write = SINGLE_DOCUMENT_CASES[case]
+    spec = dataclasses.replace(ExportSpec().with_order_by("event_id"), **fields)
+    fmt = cls(spec, **options)
+    e = load_table(spark, sf_dir, "events").limit(rows)
+    target = str(tmp_path / "doc")
+    write(fmt, e, "file://" + target)
+    got = open(target, encoding="utf-8").read()
     assert got == fmt.format_string(e)
+    assert got.count(RECORD_MARKER[cls]) == rows
+    if cls is HTMLFormatter and fields.get("header_when_no_data", True):
+        assert got.startswith("<!DOCTYPE html>") and got.endswith("</html>\n")
+    elif rows == 0:
+        assert got == ""
+    assert not [n for n in os.listdir(tmp_path) if "._spark_" in n]
 
 
 def test_csv_native_path_preserves_whitespace(spark, tmp_path):
@@ -184,7 +201,7 @@ def test_csv_go_quoting_parts_match_fidelity(spark, tmp_path):
     )
     spec = ExportSpec().with_order_by("id")
     out = str(tmp_path / "goq")
-    CSVFormatter(spec).write(df, out, go_quoting=True)
+    CSVFormatter(spec, go_quoting=True).write(df, out)
     lines = []
     for p in sorted(glob.glob(f"{out}/part-*")):
         if not p.endswith(".crc"):
@@ -197,7 +214,6 @@ def test_csv_go_quoting_parts_match_fidelity(spark, tmp_path):
 def test_xml_stream_parts_partitioned(spark, sf_dir, tmp_path):
     """Default XML scale path under hive-style partition_by: rows land
     under their partition directories as bare <row> records."""
-    from exporter_spark.formatters.xml import XMLFormatter
 
     e = load_table(spark, sf_dir, "events")
     out = str(tmp_path / "xml_part")
@@ -214,37 +230,14 @@ def test_xml_stream_parts_partitioned(spark, sf_dir, tmp_path):
     assert all("<event_type>" not in l for l in lines[:50])
 
 
-def test_html_assemble_lazy_header_empty(spark, sf_dir, tmp_path):
-    """Lazy header (with_header_when_no_data(False)) + empty input:
-    assembled document is EMPTY, matching the fidelity stream's
-    no-output rule (html.go:146-157); the default eager spec keeps
-    the skeleton."""
-    from exporter_spark.formatters.html import HTMLFormatter
-
-    e = load_table(spark, sf_dir, "events").limit(0)
-    lazy_spec = ExportSpec().with_header_when_no_data(False)
-    fmt = HTMLFormatter(lazy_spec)
-    parts = str(tmp_path / "empty_parts")
-    fmt.write(e, parts)
-    out = str(tmp_path / "empty.html")
-    fmt.assemble(parts, out, spark)
-    assert open(out).read() == "" == fmt.format_string(e)
-
-    eager = HTMLFormatter(ExportSpec())
-    eager.write(e, str(tmp_path / "eager_parts"))
-    eager.assemble(str(tmp_path / "eager_parts"), str(tmp_path / "eager.html"), spark)
-    assert open(str(tmp_path / "eager.html")).read() == eager.format_string(e)
-
-
 def test_xml_documents_mode_omits_null_elements(spark, tmp_path):
     """documents=True (StAX writer) must keep the reference's NULL
     rule — a NULL cell omits its element entirely (xml.go:113-115) —
     even though its pretty-printed layout is not byte-parity."""
-    from exporter_spark.formatters.xml import XMLFormatter
 
     df = spark.createDataFrame([(1, None, "x")], "id long, a string, b string")
     out = str(tmp_path / "docs")
-    XMLFormatter(ExportSpec()).write(df, out, documents=True)
+    XMLFormatter(ExportSpec(), documents=True).write(df, out)
     body = "".join(
         open(p, encoding="utf-8").read()
         for p in glob.glob(f"{out}/part-*")
@@ -259,7 +252,6 @@ def test_json_array_decimal_and_ntz_parity(spark, tmp_path):
     timestamp_ntz columns plan and render instead of crashing."""
     from decimal import Decimal
 
-    from exporter_spark.formatters.json import JSONFormatter
 
     df = spark.createDataFrame(
         [(1, Decimal("11.50")), (2, Decimal("0.07"))], "id long, d decimal(10,2)"
@@ -288,7 +280,6 @@ def test_json_array_nan_raises(spark, tmp_path):
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
-    from exporter_spark.formatters.json import JSONFormatter
 
     df = spark.createDataFrame([(1, float("nan"))], "id long, v double")
     # only the two Spark-side error wrappers: a bare Exception would
@@ -301,7 +292,6 @@ def test_json_array_nan_cleans_tmp(spark, tmp_path):
     """A failed distributed write must not leak the parts directory."""
     import pytest
 
-    from exporter_spark.formatters.json import JSONFormatter
 
     df = spark.createDataFrame([(1, float("nan"))], "id long, v double")
     target = str(tmp_path / "nan.json")
@@ -316,7 +306,6 @@ def test_json_array_nested_null_fields_and_timestamps(spark, tmp_path):
     (the default to_json format truncates to milliseconds)."""
     import datetime as dt
 
-    from exporter_spark.formatters.json import JSONFormatter
 
     df = spark.createDataFrame(
         [(1, (None, 2), [dt.datetime(2024, 1, 2, 3, 4, 5, 123456)])],
@@ -335,7 +324,6 @@ def test_json_array_control_char_escape_case(spark, tmp_path):
     json.dumps writes lowercase. The array path must byte-match the
     fidelity stream on raw control characters AND must not touch
     literal backslash-u text (whose backslash Jackson doubles)."""
-    from exporter_spark.formatters.json import JSONFormatter
 
     df = spark.createDataFrame(
         [
@@ -361,7 +349,6 @@ def test_xml_single_part_object_store_path(spark, sf_dir, tmp_path):
     it with an explicit file:-scheme path (the object-store-safe
     route) and check byte parity with the fidelity stream, plus the
     empty-input empty-file rule and tmp cleanup."""
-    from exporter_spark.formatters.xml import XMLFormatter
 
     e = load_table(spark, sf_dir, "events").limit(40)
     spec = ExportSpec().with_order_by("event_id")
@@ -375,28 +362,6 @@ def test_xml_single_part_object_store_path(spark, sf_dir, tmp_path):
     empty_target = str(tmp_path / "empty.xml")
     XMLFormatter(spec).write_single_part(e.limit(0), "file:" + empty_target)
     assert open(empty_target).read() == ""
-
-
-def test_html_single_part_is_complete_document(spark, sf_dir, tmp_path):
-    """write_single_part must assemble the skeleton sidecars, not
-    promote the bare rows part."""
-    from exporter_spark.formatters.html import HTMLFormatter
-
-    e = load_table(spark, sf_dir, "events").limit(10)
-    spec = ExportSpec().with_order_by("event_id")
-    target = str(tmp_path / "doc.html")
-    HTMLFormatter(spec).write_single_part(e, target)
-    got = open(target, encoding="utf-8").read()
-    assert got == Exporter(e, "html", spec).write_string()
-    assert got.startswith("<!DOCTYPE html>") and got.rstrip().endswith("</html>")
-    assert not os.path.exists(target + "._spark_tmp")
-
-    # lazy-header rule: empty input => empty file
-    empty = str(tmp_path / "empty.html")
-    HTMLFormatter(
-        ExportSpec().with_order_by("event_id").with_header_when_no_data(False)
-    ).write_single_part(e.limit(0), empty)
-    assert open(empty).read() == ""
 
 
 def test_exporter_rejects_conflicting_spec(spark, sf_dir):
@@ -419,7 +384,6 @@ def test_ndjson_write_preserves_ntz_and_nested_micros(spark, tmp_path):
     import datetime as dt
     import glob
 
-    from exporter_spark.formatters.json import JSONFormatter
 
     df = spark.createDataFrame(
         [(1, dt.datetime(2024, 1, 2, 3, 4, 5, 500000),
@@ -452,13 +416,12 @@ def test_splice_parts_rejects_overlong_drop(spark, tmp_path):
 def test_xml_documents_mode_honors_declaration_off(spark, sf_dir, tmp_path):
     import glob
 
-    from exporter_spark.formatters.xml import XMLFormatter
 
     import dataclasses
 
     e = load_table(spark, sf_dir, "events").limit(5)
     spec = dataclasses.replace(ExportSpec(), declaration=False)
     out = str(tmp_path / "xml_docs")
-    XMLFormatter(spec).write(e.coalesce(1), out, documents=True)
+    XMLFormatter(spec, documents=True).write(e.coalesce(1), out)
     part = [p for p in glob.glob(f"{out}/part-*") if not p.endswith(".crc")][0]
     assert not open(part, encoding="utf-8").read().startswith("<?xml")

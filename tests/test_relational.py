@@ -3,14 +3,10 @@
 from __future__ import annotations
 
 import datetime as dt
-import json
 
 from pyspark.sql import functions as F
 
-from exporter_spark import Exporter, ExportSpec
-from exporter_spark.formatters.json import assemble_json_array
 from exporter_spark.operators.relational import asof_join, range_join
-from exporter_spark.sources.files import load_table
 
 
 def _ts(m):
@@ -111,19 +107,3 @@ def test_range_join_half_open_and_multi_match(spark):
     # v=999: nowhere
     assert got == [(1, 10), (1, 11), (2, 11)]
 
-
-def test_assemble_json_array(spark, sf_dir, tmp_path):
-    e = load_table(spark, sf_dir, "events").limit(7)
-    parts = str(tmp_path / "nd_parts")
-    Exporter(e, "json", ExportSpec()).write(parts)
-    target = str(tmp_path / "all.json")
-    assemble_json_array(parts, target)
-    data = json.loads(open(target).read())
-    assert len(data) == 7
-    assert {d["event_id"] for d in data} == {r["event_id"] for r in e.collect()}
-    # empty input ⇒ empty file, not "[]"
-    empty_parts = str(tmp_path / "empty_parts")
-    Exporter(e.limit(0), "json", ExportSpec()).write(empty_parts)
-    empty_target = str(tmp_path / "empty.json")
-    assemble_json_array(empty_parts, empty_target)
-    assert open(empty_target).read() == ""

@@ -49,6 +49,22 @@ def test_stream_export_csv(spark, events_dir, sf_dir, tmp_path):
     assert back.count() == n_expected
 
 
+def test_stream_export_csv_keeps_whitespace(spark, tmp_path):
+    """The streaming CSV sink takes the batch writer's option set, so
+    Spark's write default — trimming leading and trailing whitespace
+    from unquoted fields, silent data corruption — is off there too."""
+    schema = "id long, v string"
+    src = str(tmp_path / "ws_src")
+    spark.createDataFrame(
+        [(1, "  leading"), (2, "trailing  "), (3, "\tTabbed")], schema
+    ).write.parquet(src)
+    stream = ss.stream_from_files(spark, src, "parquet", schema=schema)
+    out = str(tmp_path / "ws_out")
+    _wait(ss.stream_export(stream, out, fmt="csv", spec=ExportSpec()))
+    back = spark.read.options(header="true", quote='"', escape='"').csv(out)
+    got = {r["id"]: r["v"] for r in back.collect()}
+    assert got == {"1": "  leading", "2": "trailing  ", "3": "\tTabbed"}
+
 def test_stream_spec_rejects_batch_only_options(spark, events_dir):
     schema = spark.read.parquet(events_dir).schema
     stream = ss.stream_from_files(spark, events_dir, "parquet", schema=schema)
