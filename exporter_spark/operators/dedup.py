@@ -17,10 +17,15 @@ Scale design:
   * n-gram Jaccard — O(n²) *within a blocking key only*; the block
     column must keep groups small (it is the unit of skew).
   * SimHash — map-side 32-bit fingerprint; near-dup = small hamming
-    distance, found by exact-prefix banding on rotated fingerprints.
+    distance, found by pigeonhole banding on equal bit slices.
+  * MinHash, SimHash and pHash share one banded candidate join,
+    :func:`band_join` (and :func:`band_join_store` for a delta
+    against a store).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -220,6 +225,158 @@ def minhash_bands(
     return F.expr(f"array({', '.join(parts)})")
 
 
+# ---------------------------------------------------------------- banded join
+# The one candidate join of the near-dup family: band keys from
+# minhash_bands (MinHash LSH) or pigeonhole_keys (SimHash, pHash).
+
+Verify = Callable[[str, str], tuple[Column, Column]]
+
+
+def _explode_keys(df: DataFrame, keys: Column) -> DataFrame:
+    return df.select("*", F.posexplode(keys).alias("__band__", "__key__"))
+
+
+def band_join(
+    left: DataFrame, *, keys: Column, verify: Verify | None = None
+) -> DataFrame:
+    """Pairs ``(a_id, b_id)``, ``a_id < b_id``, of ``left`` rows that
+    share a band key — the banded self-join.
+
+    ``left`` holds ``__id__``, the columns ``verify`` reads and those
+    ``keys`` (an array Column, one key per band) is computed from. The
+    keys are posexploded into ``(__band__, __key__)`` and equi-joined;
+    a pair colliding in several bands comes out once. ``verify(a, b)``
+    gets the two sides' aliases and returns ``(score, keep)``: an
+    aliased score column added to the output and a predicate on it,
+    applied after the distinct. Without ``verify`` the result is the
+    bare candidate set.
+
+    The triples are repartitioned on (band, key) so both join sides
+    hang off one canonically-equal exchange. Two regimes, both checked
+    on the final adaptive plan (tests/test_operators.py pins the first):
+
+    * above the broadcast threshold (the at-scale case) the planner
+      dedupes them into ONE ``ReusedExchange``, so the pipeline under
+      ``left`` (minhash signatures, an image decode) runs once with no
+      cache lifetime to manage — measured on pHash at sf0.1: shuffle
+      write 102 KB vs read 192 KB, one write and two reads, where an
+      explicit cache gained nothing warm;
+    * below it AQE broadcasts one side instead and the pipeline under
+      ``left`` runs once per side, which is cheap next to the scan
+      because the frame is small by definition.
+
+    A pair found by the join is only a candidate; what the join
+    guarantees depends on the keys — see :func:`pigeonhole_keys` for
+    the exact (no-loss) case.
+    """
+    banded = _explode_keys(left, keys).repartition("__band__", "__key__")
+    a = banded.alias("a")
+    b = banded.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.__band__") == F.col("b.__band__"))
+        & (F.col("a.__key__") == F.col("b.__key__"))
+        & (F.col("a.__id__") < F.col("b.__id__")),
+    )
+    ids = [F.col("a.__id__").alias("a_id"), F.col("b.__id__").alias("b_id")]
+    if verify is None:
+        return pairs.select(*ids).distinct()
+    score, keep = verify("a", "b")
+    return pairs.select(*ids, score).distinct().filter(keep)
+
+
+def band_join_store(
+    delta: DataFrame,
+    store: DataFrame,
+    *,
+    keys: Column,
+    verify: Verify,
+    broadcast_delta: bool = True,
+) -> DataFrame:
+    """Distinct ``__id__`` of the ``delta`` rows that share a band key
+    with some ``store`` row and pass ``verify(store, delta)`` — the
+    delta-vs-store face of :func:`band_join`, for the incremental
+    operators. It is a second function rather than a mode of the first
+    because nothing after the key explode is shared: no repartition, no
+    id ordering, and ids instead of scored pairs come out.
+
+    ``keys`` is evaluated on each side separately, so the store's band
+    keys are recomputed map-side from what it holds (a signature, a
+    fingerprint) and the store needs no id. With ``broadcast_delta``
+    (the operators' contract: delta ≪ store) the delta's triples are
+    the broadcast build side, so the join and the ``verify`` filter run
+    inside the store scan and only matched delta ids reach the
+    distinct: the store NEVER shuffles and per-increment shuffle is
+    delta-sized at any store size (an incremental sweep caught the
+    earlier repartition-both-sides shape shuffling all of the store's
+    triples every increment). Without it both sides hash-shuffle on
+    (band, key), for a delta too large to broadcast.
+    """
+    probe = _explode_keys(delta, keys)
+    if broadcast_delta:
+        probe = F.broadcast(probe)
+    score, keep = verify("s", "d")
+    return (
+        _explode_keys(store, keys).alias("s")
+        .join(
+            probe.alias("d"),
+            (F.col("s.__band__") == F.col("d.__band__"))
+            & (F.col("s.__key__") == F.col("d.__key__")),
+        )
+        .select(F.col("d.__id__").alias("__id__"), score)
+        .filter(keep)
+        .select("__id__")
+        .distinct()
+    )
+
+
+def pigeonhole_keys(
+    col: str, *, bits: int, num_tables: int, max_hamming: int
+) -> Column:
+    """Band keys of a ``bits``-wide fingerprint column: ``num_tables``
+    equal bit slices. Two fingerprints within hamming distance h differ
+    in at most h slices, so when there are more than h slices they
+    share one exactly (pigeonhole) and :func:`band_join` finds every
+    such pair without O(n²).
+
+    Both preconditions are hard, not tuning advice — a violation would
+    silently LOSE recall — so they raise before anything is built:
+    ``num_tables`` must divide ``bits``, and ``max_hamming`` must be
+    below ``num_tables``."""
+    if bits % num_tables != 0:
+        raise ValueError(
+            f"num_tables={num_tables} must divide {bits}: uneven chunks would"
+            f" leave {bits % num_tables} fingerprint bits outside every table,"
+            " making pairs differing only there invisible"
+        )
+    if max_hamming > num_tables - 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs num_tables >= {max_hamming + 1}"
+            " (pigeonhole: a pair within hamming h shares a chunk only when"
+            " the fingerprint is split into > h chunks)"
+        )
+    width = bits // num_tables
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"shiftright({col}, {i * width}) & {(1 << width) - 1}"
+            for i in range(num_tables)
+        )
+        + ")"
+    )
+
+
+def hamming_verify(max_hamming: int) -> Verify:
+    """``verify`` for ``__fp__`` fingerprint frames: the pair's
+    ``hamming`` distance, kept when ≤ ``max_hamming``."""
+
+    def verify(a: str, b: str) -> tuple[Column, Column]:
+        d = F.bit_count(F.col(f"{a}.__fp__").bitwiseXOR(F.col(f"{b}.__fp__")))
+        return d.alias("hamming"), F.col("hamming") <= max_hamming
+
+    return verify
+
+
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -249,8 +406,8 @@ def minhash_candidate_pairs(
         num_hashes=num_hashes, shingle_n=shingle_n, family=family,
         dist_input=dist_input,
     )
-    return banded_candidate_pairs(
-        sigs, bands=bands, rows_per_band=num_hashes // bands, family=family
+    return band_join(
+        sigs, keys=minhash_bands("__sig__", bands, num_hashes // bands, family)
     )
 
 
@@ -302,43 +459,6 @@ def minhash_sig_frame(
             "__id__", minhash_over("__hs__", num_hashes, hashed=True).alias("__sig__")
         )
     )
-
-
-def banded_candidate_pairs(
-    sigs: DataFrame, *, bands: int, rows_per_band: int, family: str = "md5"
-) -> DataFrame:
-    """LSH candidate pairs from a precomputed ``(__id__, __sig__)``
-    frame — the banding + bucket-self-join half of
-    :func:`minhash_candidate_pairs`."""
-    banded = sigs.select(
-        "__id__",
-        F.posexplode(
-            minhash_bands("__sig__", bands, rows_per_band, family)
-        ).alias("__band__", "__bhash__"),
-    )
-    # Shuffle the banded triples on the join key: both sides of the
-    # self-join below then hang off canonically-equal exchanges.
-    # Two regimes, both runtime-verified on the final adaptive plan:
-    # above the AQE broadcast threshold (the at-scale case) the
-    # planner dedupes them into ONE ReusedExchange, so the signature
-    # pipeline runs once with no cache lifetime to manage; below it
-    # AQE broadcasts one side instead, recomputing the triple
-    # pipeline — acceptable since the universal-hash signature stage
-    # is cheap (one md5 per shingle) and the corpus scan dominates.
-    banded = banded.repartition("__band__", "__bhash__")
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.__band__") == F.col("r.__band__"))
-            & (F.col("l.__bhash__") == F.col("r.__bhash__"))
-            & (F.col("l.__id__") < F.col("r.__id__")),
-        )
-        .select(F.col("l.__id__").alias("a_id"), F.col("r.__id__").alias("b_id"))
-        .distinct()
-    )
-    return pairs
 
 
 def jaccard_verify_pairs(
@@ -562,9 +682,8 @@ def _collapsed_pairs(
             dist_input=True,  # reps rides the cached __tk__ shuffle
         )
     )
-    cands = banded_candidate_pairs(
-        rep_sigs,
-        bands=bands, rows_per_band=num_hashes // bands, family=family,
+    cands = band_join(
+        rep_sigs, keys=minhash_bands("__sig__", bands, num_hashes // bands, family)
     )
     rep_pairs = jaccard_verify_pairs(
         cands, reps, id_col, text_col, shingle_n=shingle_n,
@@ -1103,10 +1222,10 @@ def simhash_near_dup_pairs(
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
 
-    Candidate generation: split the 32-bit fingerprint into
-    ``num_tables`` 8-bit chunks; by pigeonhole, any pair within
-    hamming ≤ num_tables-1 shares at least one exact chunk, so an
-    exact equi-join per chunk finds all of them without O(n²).
+    Candidates come from :func:`band_join` on the pigeonhole keys of
+    :func:`pigeonhole_keys`: ``num_tables`` equal slices of the 32-bit
+    fingerprint, so every pair within ``max_hamming`` is found and the
+    two recall-losing configurations raise ``ValueError``.
 
     ``kernel`` picks the fingerprint implementation — all three are
     bit-identical on valid-Unicode text (fuzz-pinned in
@@ -1132,23 +1251,10 @@ def simhash_near_dup_pairs(
     * ``"pandas"`` — the Arrow-vectorized numpy kernel.
     * ``"sql"`` — the pure-Catalyst expression (32 interpreted HOF
       folds; the form the DuckDB oracle mirrors).
-
-    The pigeonhole guarantee is a hard precondition, not a tuning
-    suggestion — both violations below would silently LOSE recall,
-    so they raise instead.
     """
-    if 32 % num_tables != 0:
-        raise ValueError(
-            f"num_tables={num_tables} must divide 32: uneven chunks would"
-            f" leave {32 % num_tables} fingerprint bits outside every table,"
-            " making pairs differing only there invisible"
-        )
-    if max_hamming > num_tables - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs num_tables >= {max_hamming + 1}"
-            " (pigeonhole: a pair within hamming h shares a chunk only when"
-            " the fingerprint is split into > h chunks)"
-        )
+    keys = pigeonhole_keys(
+        "__fp__", bits=32, num_tables=num_tables, max_hamming=max_hamming
+    )
     if kernel == "auto":
         try:
             from exporter_spark.javakernel import ensure_simhash_java
@@ -1171,41 +1277,7 @@ def simhash_near_dup_pairs(
     fp = _spread(df, id_col).select(
         F.col(id_col).alias("__id__"), fp_col.alias("__fp__")
     )
-    chunk_bits = 32 // num_tables
-    chunks = fp.select(
-        "__id__",
-        "__fp__",
-        F.posexplode(
-            F.expr(
-                "array("
-                + ", ".join(
-                    f"shiftright(__fp__, {i * chunk_bits}) & {(1 << chunk_bits) - 1}"
-                    for i in range(num_tables)
-                )
-                + ")"
-            )
-        ).alias("__tbl__", "__chunk__"),
-    )
-    # pre-shuffle on the join key → ReusedExchange across the self-join
-    chunks = chunks.repartition("__tbl__", "__chunk__")
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.__tbl__") == F.col("b.__tbl__"))
-            & (F.col("a.__chunk__") == F.col("b.__chunk__"))
-            & (F.col("a.__id__") < F.col("b.__id__")),
-        )
-        .select(
-            F.col("a.__id__").alias("a_id"),
-            F.col("b.__id__").alias("b_id"),
-            F.bit_count(F.col("a.__fp__").bitwiseXOR(F.col("b.__fp__"))).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    return pairs
+    return band_join(fp, keys=keys, verify=hamming_verify(max_hamming))
 
 
 # ---------------------------------------------------------- paragraph dedup

@@ -66,20 +66,15 @@ partitioned/bucketed by a band-key prefix if increments become
 latency-critical; the operators take plain DataFrames and do not care
 how the store is laid out.
 
-Scale posture at 100 TB: the store is STRICTLY MAP-SIDE — scanned
-once per increment, band keys sliced+hashed in place, candidate join
-and lane-agreement filter executed against the broadcast delta inside
-that scan, reduced to a matched-id set before anything shuffles
-(``broadcast_delta``, default on; round 11 — the incremental sweep
-caught the previous shape hash-shuffling the whole store's band
-triples per increment, linear-in-store bytes). Per-increment shuffle
-volume is therefore delta-sized at any store size: the delta's own
-in-batch pipeline plus matched-id distincts/anti-joins. The
-delta-side quadratic risk is the same same-bucket collision risk as
-the batch pipeline and is bounded by the same banding math; the
-store side contributes at most its per-bucket survivor count, which
-near-dup dropping keeps low by construction (survivors are pairwise
-dissimilar below threshold).
+Scale posture at 100 TB: the store probe is
+:func:`exporter_spark.operators.dedup.band_join_store`, so the store
+is strictly map-side and per-increment shuffle volume is delta-sized
+at any store size: the delta's own in-batch pipeline plus matched-id
+distincts/anti-joins. The delta-side quadratic risk is the same
+same-bucket collision risk as the batch pipeline and is bounded by the
+same banding math; the store side contributes at most its per-bucket
+survivor count, which near-dup dropping keeps low by construction
+(survivors are pairwise dissimilar below threshold).
 """
 
 from __future__ import annotations
@@ -91,6 +86,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from exporter_spark.operators.dedup import (
+    band_join_store,
     connected_components,
     content_digest,
     dedup_keep_representatives,
@@ -376,18 +372,6 @@ def minhash_signatures(
     ).select(F.col("__id__").alias(id_col), F.col("__sig__").alias(SIG_COL))
 
 
-def _band_triples(
-    sigs: DataFrame, id_col: str, *, bands: int, rows_per_band: int, family: str
-) -> DataFrame:
-    return sigs.select(
-        F.col(id_col),
-        SIG_COL,
-        F.posexplode(
-            minhash_bands(SIG_COL, bands, rows_per_band, family)
-        ).alias("__band__", "__bhash__"),
-    )
-
-
 def incremental_minhash_dedup(
     new_df: DataFrame,
     id_col: str,
@@ -432,11 +416,9 @@ def incremental_minhash_dedup(
     cluster semantics and the store parameter-constancy contract.
 
     ``broadcast_delta`` (default True — the operator's contract is
-    delta ≪ store): ship the delta's band triples to the store scan
-    as a broadcast build side so the store never shuffles. Set False
-    for a delta too large to broadcast (then both band-triple sides
-    hash-shuffle on (band, bhash) — still signatures only, never
-    text).
+    delta ≪ store) is :func:`dedup.band_join_store`'s: the store never
+    shuffles. Set False for a delta too large to broadcast (both sides
+    then shuffle signatures only, never text).
 
     ``store_params``: the store's parameter manifest
     (:func:`read_store_params` / :func:`ensure_store_params`). When
@@ -448,7 +430,6 @@ def incremental_minhash_dedup(
     predicate (round 12, VERDICT r11 #3). Without it only
     ``num_hashes`` is enforceable, via the in-plan assert.
     """
-    rows_per_band = num_hashes // bands
     if store_params is not None:
         check_store_params(
             store_params,
@@ -524,17 +505,6 @@ def incremental_minhash_dedup(
         return batch, sigs
 
     sigs = _assert_lane_count(sigs, num_hashes, "delta")
-
-    new_b = _band_triples(
-        sigs, id_col, bands=bands, rows_per_band=rows_per_band, family=family
-    ).select(
-        F.col(id_col).alias("__nid__"),
-        F.col(SIG_COL).alias("__nsig__"),
-        "__band__",
-        "__bhash__",
-    )
-    if broadcast_delta:
-        new_b = F.broadcast(new_b)
     # manifest-verified store ⇒ the lane count is already proven and
     # the per-row assert drops out of the 100 TB-side scan
     store_side = (
@@ -542,41 +512,30 @@ def incremental_minhash_dedup(
         if store_params is not None
         else _assert_lane_count(seen_sigs, num_hashes, "store")
     )
-    old_b = _band_triples(
-        store_side,
-        id_col, bands=bands, rows_per_band=rows_per_band,
-        family=family,
-    ).select(
-        F.col(SIG_COL).alias("__osig__"), "__band__", "__bhash__"
-    )
 
     # lane-agreement estimate: share of equal minhash components.
-    agree = (
-        F.size(
+    def agree(s: str, d: str):
+        share = F.size(
             F.expr(
-                "filter(zip_with(__nsig__, __osig__, (x, y) -> x = y),"
-                " t -> t)"
+                f"filter(zip_with({d}.{SIG_COL}, {s}.{SIG_COL},"
+                " (x, y) -> x = y), t -> t)"
             )
-        )
-        / F.lit(num_hashes)
-    )
-    # The candidate join runs INSIDE the store scan: band keys are
-    # recomputed map-side from the stored signatures, the delta's
-    # band triples ride in as the broadcast build side, and the
-    # lane-agreement filter reduces the output to matched delta ids
-    # before anything shuffles — per-increment shuffle volume is
-    # delta-sized at ANY store size (the r11 sweep caught the
-    # previous repartition-both-sides shape shuffling the whole
-    # store's triples every increment). Materialized because both
-    # returned frames consume it: the store scan runs ONCE.
+        ) / F.lit(num_hashes)
+        return share.alias("agree"), F.col("agree") >= F.lit(threshold)
+
+    # Materialized because both returned frames consume it: the store
+    # scan runs ONCE.
     matched = materialize(
-        old_b.join(new_b, ["__band__", "__bhash__"])
-        .filter(agree >= F.lit(threshold))
-        .select(F.col("__nid__").alias(id_col))
-        .distinct()
+        band_join_store(
+            sigs.select(F.col(id_col).alias("__id__"), SIG_COL),
+            store_side.select(SIG_COL),
+            keys=minhash_bands(SIG_COL, bands, num_hashes // bands, family),
+            verify=agree,
+            broadcast_delta=broadcast_delta,
+        )
     )
-    survivors = batch.join(matched, id_col, "left_anti")
-    return survivors, sigs.join(matched, id_col, "left_anti")
+    survivors = batch.join(matched, batch[id_col] == matched["__id__"], "left_anti")
+    return survivors, sigs.join(matched, sigs[id_col] == matched["__id__"], "left_anti")
 
 
 def append_signature_increment(

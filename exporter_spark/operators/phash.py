@@ -24,11 +24,11 @@ for ENGINE-EXACT reproducibility:
   statistic; ties clear the bit). Worst-case magnitudes stay under
   2^51, far inside int64.
 
-Near-dup pairs use the simhash pigeonhole banding
-(``dedup.simhash_near_dup_pairs``): the 63-bit fingerprint splits
-into ``num_tables`` equal chunks (divisors of 63 — 9 tables of 7 bits
-by default), any pair within hamming <= num_tables-1 shares an exact
-chunk, so per-chunk equi-joins find every such pair without O(n^2).
+Near-dup pairs use the same pigeonhole banding as SimHash: the
+63-bit fingerprint splits into ``num_tables`` equal chunks (divisors
+of 63 — 9 tables of 7 bits by default) by
+``dedup.pigeonhole_keys``, and ``dedup.band_join`` (batch) or
+``dedup.band_join_store`` (delta vs store) equi-joins on them.
 
 The reference (go-data-exporter/exporter) has no media support; this
 module is part of the mandated LLM-pipeline scope extension. pHash
@@ -42,6 +42,15 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from exporter_spark.operators.dedup import (
+    band_join,
+    band_join_store,
+    connected_components,
+    hamming_verify,
+    pigeonhole_keys,
+)
+from exporter_spark.operators.partitioning import materialize
 
 DCT_SCALE = 10_000
 
@@ -202,87 +211,15 @@ def phash_near_dup_pairs(
 ) -> DataFrame:
     """Image near-dup pairs ``(a_id, b_id, hamming)`` by pHash —
     pigeonhole-banded like ``simhash_near_dup_pairs``: never
-    all-pairs, the per-chunk equi-join finds every pair within
-    ``hamming <= num_tables - 1`` exactly.
-
-    The guarantees are hard preconditions (a violation silently LOSES
-    recall, so it raises): ``num_tables`` must divide the 63-bit
-    fingerprint evenly, and ``max_hamming`` must stay under it."""
-    if N_BITS % num_tables != 0:
-        raise ValueError(
-            f"num_tables={num_tables} must divide {N_BITS}: uneven chunks"
-            " would leave fingerprint bits outside every table, making"
-            " pairs differing only there invisible"
-        )
-    if max_hamming > num_tables - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs num_tables >= {max_hamming + 1}"
-            " (pigeonhole: a pair within hamming h shares a chunk only when"
-            " the fingerprint is split into > h chunks)"
-        )
-    # no materialize() here despite the expensive Python decode: the
-    # repartition below makes both self-join sides the SAME exchange,
-    # and ReuseExchange runs the decode map once (verified at sf0.1 —
-    # shuffle write 102 KB vs read 192 KB = one write, two reads, and
-    # an explicit cache measured zero warm-wall gain at the price of
-    # pinning the hash frame). Same contract as simhash's banding.
+    all-pairs, every pair within ``hamming <= max_hamming`` exactly
+    (see ``dedup.band_join`` for why the decode is not cached)."""
+    keys = pigeonhole_keys(
+        "__fp__", bits=N_BITS, num_tables=num_tables, max_hamming=max_hamming
+    )
     fp = phash_frame(df, payload_col, id_col, decoder=decoder).select(
         F.col(id_col).alias("__id__"), F.col("phash").alias("__fp__")
     )
-    return banded_hamming_pairs(fp, max_hamming=max_hamming, num_tables=num_tables)
-
-
-def _chunk_triples(fp: DataFrame, num_tables: int) -> DataFrame:
-    chunk_bits = N_BITS // num_tables
-    return fp.select(
-        "__id__",
-        "__fp__",
-        F.posexplode(
-            F.expr(
-                "array("
-                + ", ".join(
-                    f"shiftright(__fp__, {i * chunk_bits})"
-                    f" & {(1 << chunk_bits) - 1}"
-                    for i in range(num_tables)
-                )
-            + ")"
-            )
-        ).alias("__tbl__", "__chunk__"),
-    )
-
-
-def banded_hamming_pairs(
-    fp: DataFrame, *, max_hamming: int, num_tables: int
-) -> DataFrame:
-    """The pigeonhole self-join over a ``(__id__, __fp__)`` hash frame
-    — shared by the batch pair generator and the incremental face
-    (which also bands a DELTA against a STORE with the same chunk
-    expressions; band keys recompute from the stored hash by bit
-    slicing, nothing image-sized needed)."""
-    chunks = _chunk_triples(fp, num_tables)
-    # no materialize despite the expensive upstream decode: both join
-    # sides are this SAME repartition exchange, and ReuseExchange runs
-    # the decode map once (measured — see phash_near_dup_pairs note)
-    chunks = chunks.repartition("__tbl__", "__chunk__")
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.__tbl__") == F.col("b.__tbl__"))
-            & (F.col("a.__chunk__") == F.col("b.__chunk__"))
-            & (F.col("a.__id__") < F.col("b.__id__")),
-        )
-        .select(
-            F.col("a.__id__").alias("a_id"),
-            F.col("b.__id__").alias("b_id"),
-            F.bit_count(
-                F.col("a.__fp__").bitwiseXOR(F.col("b.__fp__"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return band_join(fp, keys=keys, verify=hamming_verify(max_hamming))
 
 
 def incremental_phash_dedup(
@@ -306,12 +243,9 @@ def incremental_phash_dedup(
     to append. ``seen_hashes=None`` bootstraps a store from the first
     batch. The store holds 8 bytes per kept image — no pixels — so
     per-increment work is: decode the DELTA once, one in-batch banded
-    join, and one store probe whose band keys recompute from the
-    stored hash by bit slicing. With ``broadcast_delta=True`` (the
-    contract: delta ≪ store) the delta's chunk keys broadcast into
-    the store scan and the store NEVER shuffles — per-increment
-    shuffle is delta-sized at any store size, the same posture the
-    r11/r12 sweeps pinned for the MinHash face.
+    join, and one ``dedup.band_join_store`` probe whose band keys
+    recompute from the stored hash by bit slicing (with
+    ``broadcast_delta``, the default, the store never shuffles).
 
     Parameter constancy (``max_hamming``/``num_tables``) is the same
     hard contract as the MinHash store's manifest: band keys are only
@@ -319,19 +253,9 @@ def incremental_phash_dedup(
     match the family: increments compare against SURVIVORS only
     (chain clusters may keep more than a full batch re-run would —
     the documented divergence in operators/incremental.py)."""
-    if N_BITS % num_tables != 0:
-        raise ValueError(
-            f"num_tables={num_tables} must divide {N_BITS}: uneven chunks"
-            " would leave fingerprint bits outside every table"
-        )
-    if max_hamming > num_tables - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs num_tables >= {max_hamming + 1}"
-            " (pigeonhole)"
-        )
-    from exporter_spark.operators.dedup import connected_components
-    from exporter_spark.operators.partitioning import materialize
-
+    keys = pigeonhole_keys(
+        "__fp__", bits=N_BITS, num_tables=num_tables, max_hamming=max_hamming
+    )
     # one decode per increment: the hash frame feeds the in-batch
     # join, the store probe, and both returns (delta-sized cache;
     # released by the caller's cache_scope)
@@ -341,46 +265,19 @@ def incremental_phash_dedup(
         )
     )
     # in-batch: cluster near-dups, keep each cluster's min id
-    pairs = banded_hamming_pairs(
-        fp, max_hamming=max_hamming, num_tables=num_tables
-    )
-    comp = connected_components(pairs)
+    verify = hamming_verify(max_hamming)
+    comp = connected_components(band_join(fp, keys=keys, verify=verify))
     losers = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias("__id__")
     )
     kept = fp.join(losers, "__id__", "left_anti")
     if seen_hashes is not None:
-        store = seen_hashes.select(
-            F.col(id_col).alias("__sid__"), F.col("phash").alias("__sfp__")
-        )
-        probe = _chunk_triples(kept, num_tables)
-        if broadcast_delta:
-            probe = F.broadcast(probe)
-        chunk_bits = N_BITS // num_tables
-        store_chunks = store.select(
-            "__sfp__",
-            F.posexplode(
-                F.expr(
-                    "array("
-                    + ", ".join(
-                        f"shiftright(__sfp__, {i * chunk_bits})"
-                        f" & {(1 << chunk_bits) - 1}"
-                        for i in range(num_tables)
-                    )
-                    + ")"
-                )
-            ).alias("__tbl__", "__chunk__"),
-        )
+        store = seen_hashes.select(F.col("phash").alias("__fp__"))
         matched = materialize(
-            store_chunks.join(probe, ["__tbl__", "__chunk__"])
-            .filter(
-                F.bit_count(
-                    F.col("__sfp__").bitwiseXOR(F.col("__fp__"))
-                )
-                <= max_hamming
+            band_join_store(
+                kept, store, keys=keys, verify=verify,
+                broadcast_delta=broadcast_delta,
             )
-            .select("__id__")
-            .distinct()
         )
         kept = kept.join(matched, "__id__", "left_anti")
     survivors = new_df.join(

@@ -326,6 +326,52 @@ def test_simhash_near_dup(dup_docs):
     assert (1, 3) in got  # one-word change ⇒ few bits
 
 
+def test_band_self_joins_reuse_one_shuffle(dup_docs, spark):
+    """The reuse contract of ``dedup.band_join``: above the broadcast
+    threshold both join sides read ONE shuffle of the band triples —
+    the final adaptive plan holds one (band, key) repartition
+    exchange and one ``ReusedExchange`` of it — for the MinHash, the
+    SimHash and the pHash self-joins."""
+    from exporter_spark.operators import phash
+
+    y, x, ch = np.indices((16, 16, 3))
+    imgs = [((i * 37 + 29 * y + 5 * x + 11 * ch) % 256).astype(np.uint8) for i in range(4)]
+    media = spark.createDataFrame(
+        [(i, bytearray(multimodal.encode_png(px)), None) for i, px in enumerate(imgs * 2)],
+        multimodal.media_schema(),
+    )
+    thresholds = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {key: spark.conf.get(key, None) for key in thresholds}
+    try:
+        for key in thresholds:
+            spark.conf.set(key, "-1")
+        frames = {
+            "minhash": dedup.minhash_candidate_pairs(dup_docs, "doc_id", "text"),
+            "simhash": dedup.simhash_near_dup_pairs(
+                dup_docs, "doc_id", "text", kernel="sql"
+            ),
+            "phash": phash.phash_near_dup_pairs(media),
+        }
+        for name, df in frames.items():
+            assert df.collect(), name
+            final = df._jdf.queryExecution().executedPlan().executedPlan()
+            bands = [
+                ln for ln in final.toString().splitlines()
+                if "REPARTITION_BY_COL" in ln
+            ]
+            assert len(bands) == 2, (name, bands)
+            assert sum("ReusedExchange" in ln for ln in bands) == 1, (name, bands)
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
 # ---------------------------------------------------------------- similarity
 
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from exporter_spark.operators import multimodal, phash
+from exporter_spark.operators import dedup, multimodal, phash
 from exporter_spark.operators.gif import encode_gif
 from exporter_spark.operators.jpeg import encode_jpeg
 from exporter_spark.operators.multimodal import (
@@ -155,16 +155,29 @@ def test_gray_png_payloads_through_frame_dispatch(spark):
     assert got[4] == want  # x257 scaling preserves median signs
 
 
-def test_pigeonhole_guards():
+@pytest.mark.parametrize(
+    "call, bits, tables",
+    [
+        (
+            lambda df, **kw: dedup.simhash_near_dup_pairs(df, "id", "text", **kw),
+            32,
+            4,
+        ),
+        (phash.phash_near_dup_pairs, 63, 9),
+        (phash.incremental_phash_dedup, 63, 9),
+    ],
+    ids=["simhash_near_dup_pairs", "phash_near_dup_pairs", "incremental_phash_dedup"],
+)
+def test_pigeonhole_guards(call, bits, tables):
     # the guards run before the DataFrame is touched, so a bare
     # object suffices — recall-losing configurations must refuse
     class _Fake:
         pass
 
-    with pytest.raises(ValueError, match="must divide 63"):
-        phash.phash_near_dup_pairs(_Fake(), num_tables=8)
-    with pytest.raises(ValueError, match="needs num_tables"):
-        phash.phash_near_dup_pairs(_Fake(), num_tables=9, max_hamming=9)
+    with pytest.raises(ValueError, match=f"must divide {bits}"):
+        call(_Fake(), num_tables=tables + 1)
+    with pytest.raises(ValueError, match="needs num_tables.*pigeonhole"):
+        call(_Fake(), num_tables=tables, max_hamming=tables)
 
 
 def test_pool8_exact_geometry():
@@ -328,25 +341,24 @@ def test_incremental_phash_dedup_two_increments(spark):
     # sanity: novel is far from everything at the threshold
     for other in (base0, base1, pair_a):
         assert bin(phash.phash63(novel) ^ phash.phash63(other)).count("1") > 8
-    with cache_scope():
-        b2 = media([(10, near_stored), (11, pair_a), (12, pair_b), (13, novel)])
-        s2, append2 = phash.incremental_phash_dedup(b2, seen_hashes=store_df)
-        kept2 = sorted(r["media_id"] for r in s2.collect())
-        assert kept2 == [11, 13]  # 10 matched store; 12 lost to 11
-        app2 = append2.collect()
-        assert sorted(r["media_id"] for r in app2) == [11, 13]
+    b2 = media([(10, near_stored), (11, pair_a), (12, pair_b), (13, novel)])
+    # the store probe gives the same answer broadcast or shuffled
+    runs = {}
+    for broadcast_delta in (True, False):
+        with cache_scope():
+            s2, append2 = phash.incremental_phash_dedup(
+                b2, seen_hashes=store_df, broadcast_delta=broadcast_delta
+            )
+            runs[broadcast_delta] = (
+                sorted(r["media_id"] for r in s2.collect()),
+                sorted(append2.collect()),
+            )
+    assert runs[True] == runs[False]
+    kept2, app2 = runs[True]
+    assert kept2 == [11, 13]  # 10 matched store; 12 lost to 11
+    assert sorted(r["media_id"] for r in app2) == [11, 13]
     # idempotence: replay batch 2 against store ∪ append2
     store2 = spark.createDataFrame(store + app2, "media_id long, phash long")
     with cache_scope():
         s3, append3 = phash.incremental_phash_dedup(b2, seen_hashes=store2)
         assert s3.count() == 0 and append3.count() == 0
-
-
-def test_incremental_phash_guards_and_store_constancy(spark):
-    class _Fake:
-        pass
-
-    with pytest.raises(ValueError, match="must divide 63"):
-        phash.incremental_phash_dedup(_Fake(), num_tables=10)
-    with pytest.raises(ValueError, match="pigeonhole"):
-        phash.incremental_phash_dedup(_Fake(), num_tables=9, max_hamming=20)
