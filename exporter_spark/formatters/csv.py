@@ -37,18 +37,18 @@ def csv_field_expr(col: Column, delimiter: str, null_value: str) -> Column:
     """Go encoding/csv field quoting as a Catalyst expression (the
     exact rule set of _go_csv_field below, but JVM-side). NULL cells
     become the configured null string first, then quote like any
-    field — matching the reference (csv.go:196-210)."""
-    s = F.coalesce(col, F.lit(null_value))
-    needs = (
-        (F.instr(s, delimiter) > 0)
-        | (F.instr(s, '"') > 0)
-        | (F.instr(s, "\r") > 0)
-        | (F.instr(s, "\n") > 0)
-        | F.substring(s, 1, 1).isin(*GO_SPACE_CHARS)
-        | (s == "\\.")
-    )
-    quoted = F.concat(F.lit('"'), F.replace(s, F.lit('"'), F.lit('""')), F.lit('"'))
-    return F.when(needs, quoted).otherwise(s)
+    field — matching the reference (csv.go:196-210).
+
+    ``col`` is referenced once, so CollapseProject inlines the display
+    projection and an ordered limit plans as one TakeOrderedAndProject
+    job (a second reference keeps both Projects: 3–4 jobs under
+    CollectLimit). Hence quote-doubling, then one whole-field regex."""
+    # written as \x{..}, a delimiter that is a regex metacharacter stays literal
+    esc = "".join(f"\\x{{{ord(c):x}}}" for c in delimiter + '"\r\n')
+    ws = "".join(f"\\x{{{ord(c):x}}}" for c in GO_SPACE_CHARS)
+    s = F.replace(F.coalesce(col, F.lit(null_value)), F.lit('"'), F.lit('""'))
+    rule = rf"(?s)\A(?:[{ws}].*|\\\.|[^{esc}]*+[{esc}].*)\z"
+    return F.regexp_replace(s, rule, '"$0"')
 
 
 def csv_line_expr(cols: list[str], delimiter: str, null_value: str) -> Column:

@@ -48,7 +48,9 @@ def html_row_expr(cols: list[str], null_s: str = NULL_SPAN) -> Column:
     span by default — html.go:36,176-180) and values NOT HTML-escaped
     (html.go:160, the documented parity quirk). Module-level twin of
     csv.csv_line_expr / xml.xml_row_expr so the record semantics are
-    oracle-checkable independent of the document framing."""
+    oracle-checkable independent of the document framing. Like those
+    two, it references each column once (see csv_field_expr), so an
+    ordered limit plans as one TakeOrderedAndProject job."""
     parts: list[Column] = [F.lit("<tr>")]
     for c in cols:
         parts.append(F.lit("<td>"))

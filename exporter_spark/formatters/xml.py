@@ -91,18 +91,18 @@ def xml_row_expr(
     escape_safe: set[str] | frozenset[str] = frozenset(),
 ) -> Column:
     """One ``<row>...</row>`` record as a single Catalyst expression;
-    NULL cells omit their element (xml.go:113-115). Columns named in
+    NULL cells omit their element (xml.go:113-115): its ``concat`` is
+    NULL exactly when the cell is. Each column is referenced once, so
+    CollapseProject inlines the display projection and an ordered
+    limit plans as one TakeOrderedAndProject job. Columns named in
     ``escape_safe`` skip the 8-entity replace chain — their display
     strings provably contain no escapable characters (numeric,
     boolean, temporal renderings)."""
     parts = [F.lit(f"<{row_tag}>")]
     for c, tag in zip(cols, tags):
         body = qcol(c) if c in escape_safe else xml_escape_expr(qcol(c))
-        parts.append(
-            F.when(qcol(c).isNull(), F.lit("")).otherwise(
-                F.concat(F.lit(f"<{tag}>"), body, F.lit(f"</{tag}>"))
-            )
-        )
+        element = F.concat(F.lit(f"<{tag}>"), body, F.lit(f"</{tag}>"))
+        parts.append(F.coalesce(element, F.lit("")))
     parts.append(F.lit(f"</{row_tag}>"))
     return F.concat(*parts)
 

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from exporter_spark.session import get_spark
@@ -16,3 +18,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (the number of Spark jobs ``fn()`` ran, its
+    result), counted through a job group of its own."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def count(fn):
+        group = f"count_jobs-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return count

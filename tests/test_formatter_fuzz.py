@@ -91,23 +91,41 @@ def test_csv_fidelity_round_trip(spark, rows):
     assert parsed[1:] == [[str(i), a, b] for i, (a, b) in enumerate(rows)]
 
 
-@given(st.lists(_CELL, min_size=1, max_size=8))
+# Go's two quote triggers besides the delimiter, quote and CR/LF: a
+# lone ``\.`` (and only that field) and a leading unicode.IsSpace rune
+# beyond Latin-1's space/tab. Checked in every dual-path example.
+_CURATED = ["\\.", "\\.x", "a\\.", "\\.\n", "\u3000x", "\x85x"]
+# regex metacharacters among them: the JVM rule must keep each literal
+_DELIMITERS = [",", ";", "\t", "|", "]", "^", "\\", "-"]
+
+
+@given(
+    st.lists(_CELL | st.none(), min_size=1, max_size=8),
+    st.sampled_from(_DELIMITERS),
+    _JCELL,
+)
 @settings(max_examples=8, deadline=None)
-def test_csv_dual_path_quoting_agrees(spark, cells):
+def test_csv_dual_path_quoting_agrees(spark, cells, delimiter, null_value):
     """The JVM expression (csv_field_expr, the scale/fidelity record
     path) and the Python twin (_go_csv_field, the header path) must
-    emit byte-identical fields for arbitrary unicode — same dual-path
-    contract the goldens pin on curated strings."""
+    emit byte-identical fields for arbitrary unicode, any delimiter
+    and a NULL cell's replacement string — same dual-path contract
+    the goldens pin on curated strings."""
     from pyspark.sql import functions as F
 
     from exporter_spark.formatters.csv import csv_field_expr
 
+    cells = cells + _CURATED
     df = spark.createDataFrame([(c,) for c in cells], "raw string")
     got = [
         r["q"]
-        for r in df.select(csv_field_expr(F.col("raw"), ",", "").alias("q")).collect()
+        for r in df.select(
+            csv_field_expr(F.col("raw"), delimiter, null_value).alias("q")
+        ).collect()
     ]
-    assert got == [_go_csv_field(c, ",") for c in cells]
+    assert got == [
+        _go_csv_field(null_value if c is None else c, delimiter) for c in cells
+    ]
 
 
 @given(st.lists(st.tuples(_JCELL | st.none(), _JCELL), min_size=1, max_size=5))
