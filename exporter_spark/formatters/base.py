@@ -1,19 +1,22 @@
-"""Formatter protocol — the Spark analog of codec.Codec
+"""Formatter base — the Spark analog of codec.Codec
 (/root/reference/codec/codec.go:18-20).
 
 A text format describes itself once: a ``Framing``, the bytes around
 and between its records, which covers every rule of the reference's
 codecs (eager or lazy csv header and HTML skeleton, ndjson lines, the
 JSON array with nothing at all for no rows, XML's root written only
-once a row exists); and a record per row, a Catalyst ``Column`` over
-the spec's projection (``records``; JSON's fidelity stream renders in
-Python instead, ``stream_rows``). Two drivers consume it:
+once a row exists); and a record per row, one SQL expression over the
+spec's projection, built as text and applied with one ``selectExpr``
+(``records``; JSON's fidelity stream renders in Python instead,
+``stream_rows``). Two drivers consume it:
 
 * the fidelity stream (``iter_chunks``, behind ``format_string`` and
   ``write_single_file``): one ordered byte stream identical to what the
-  reference's io.Writer would receive. The driver holds one partition
-  at a time, but it is a single-stream concentration point — golden
-  files, oracle comparison and small exports only.
+  reference's io.Writer would receive. A spec with a limit collects its
+  rows at once (a limit plans to one output partition, and a top-K
+  collects in one stage); without one the driver holds one partition
+  at a time. Either way it is a single-stream concentration point —
+  golden files, oracle comparison and small exports only.
 * the part-file driver (``write``, ``splice_document``): executors
   write the records as text part files, partition columns in the
   directory name; one document is those parts spliced JVM-side by
@@ -28,42 +31,16 @@ from __future__ import annotations
 from contextlib import contextmanager
 from dataclasses import dataclass
 from operator import itemgetter
-from typing import Callable, Iterator, Protocol, Sequence
+from typing import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, Row
 
 from exporter_spark import fsio, planinfo
 from exporter_spark.plans.spec import ExportSpec
 
-
-from exporter_spark.functions.tostring import qcol  # noqa: F401  (re-export:
-# every formatter record expression resolves literal column names
-# through qcol — see its docstring in functions/tostring.py)
-
-
-def jvm_str(s: str) -> str:
-    """Project a Python string onto the JVM string domain — what the
-    same value looks like after crossing into a DataFrame.
-
-    CPython strings may carry surrogate CODE POINTS (U+D800-DFFF);
-    JVM/Arrow strings cannot receive them — the transfer encodes each
-    Python code point to UTF-8, where every surrogate (even a
-    high+low sequence that would pair in UTF-16) is individually
-    unencodable and becomes its own U+FFFD. Measured against the real
-    boundary in the round-8 fuzz: '\\ud800\\udfff' arrives as TWO
-    replacement chars, never the combined astral char — so the
-    projection is strictly per-code-point, no pairing. Go strings
-    (the parity target) can't hold surrogates either (invalid
-    UTF-8). The Python formatter twins run BEFORE any JVM boundary
-    (headers, fidelity-stream assembly); without this projection they
-    diverge from their Catalyst-expression counterparts on inputs the
-    pipeline can never actually carry. No-op for any string that ever
-    crossed the boundary."""
-    if any("\ud800" <= ch <= "\udfff" for ch in s):
-        return "".join(
-            "�" if "\ud800" <= ch <= "\udfff" else ch for ch in s
-        )
-    return s
+# re-exported: every formatter's record renders names with sql_name and
+# literals with sql_str, and the Python twins project with jvm_str
+from exporter_spark.functions.tostring import jvm_str, sql_name, sql_str  # noqa: F401
 
 
 @dataclass(frozen=True)
@@ -93,16 +70,6 @@ def splice_document(parts_dir: str, out_path: str, framing: Framing, spark=None)
     # splice_parts writes nothing when no part holds a record
     if framing.empty and not fsio.file_len(out_path, spark):
         fsio.write_text(out_path, framing.empty, spark)
-
-
-class Formatter(Protocol):
-    spec: ExportSpec
-
-    def write(
-        self, df: DataFrame, path: str, partition_by: list[str] | None = None
-    ) -> None: ...
-
-    def iter_chunks(self, df: DataFrame) -> Iterator[str]: ...
 
 
 class BaseFormatter:
@@ -176,7 +143,10 @@ class BaseFormatter:
         framing = self.framing(df)
         rows, render = self.stream_rows(df)
         lead, wrote = framing.prologue, False
-        for row in rows.toLocalIterator():
+        # a limit plans to one output partition, which toLocalIterator
+        # would hold whole anyway; collect runs a top-K as one stage,
+        # without the single-partition shuffle of the RDD iterator
+        for row in rows.collect() if self.spec.limit >= 0 else rows.toLocalIterator():
             yield lead + render(row)
             lead, wrote = framing.sep, True
         yield framing.epilogue if wrote else framing.empty

@@ -18,10 +18,9 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from exporter_spark.formatters.base import BaseFormatter, Framing, jvm_str, qcol
+from exporter_spark.formatters.base import BaseFormatter, Framing, jvm_str, sql_name, sql_str
 
 # Go unicode.IsSpace set (encoding/csv fieldNeedsQuotes quotes a field
 # whose FIRST rune is any of these — not just space/tab):
@@ -33,29 +32,32 @@ GO_SPACE_CHARS = (
 )
 
 
-def csv_field_expr(col: Column, delimiter: str, null_value: str) -> Column:
-    """Go encoding/csv field quoting as a Catalyst expression (the
-    exact rule set of _go_csv_field below, but JVM-side). NULL cells
-    become the configured null string first, then quote like any
-    field — matching the reference (csv.go:196-210).
+_QUOTED_MATCH = sql_str('"$0"')
 
-    ``col`` is referenced once, so CollapseProject inlines the display
+
+def csv_field_expr(c: str, delimiter: str, null_value: str) -> str:
+    """Go encoding/csv field quoting as SQL text over the value ``c``
+    (the exact rule set of _go_csv_field below, but JVM-side). NULL
+    cells become the configured null string first, then quote like
+    any field — matching the reference (csv.go:196-210).
+
+    ``c`` is referenced once, so CollapseProject inlines the display
     projection and an ordered limit plans as one TakeOrderedAndProject
     job (a second reference keeps both Projects: 3–4 jobs under
     CollectLimit). Hence quote-doubling, then one whole-field regex."""
     # written as \x{..}, a delimiter that is a regex metacharacter stays literal
-    esc = "".join(f"\\x{{{ord(c):x}}}" for c in delimiter + '"\r\n')
-    ws = "".join(f"\\x{{{ord(c):x}}}" for c in GO_SPACE_CHARS)
-    s = F.replace(F.coalesce(col, F.lit(null_value)), F.lit('"'), F.lit('""'))
+    esc = "".join(f"\\x{{{ord(ch):x}}}" for ch in delimiter + '"\r\n')
+    ws = "".join(f"\\x{{{ord(ch):x}}}" for ch in GO_SPACE_CHARS)
+    s = f"replace(coalesce({c}, {sql_str(null_value)}), '\"', '\"\"')"
     rule = rf"(?s)\A(?:[{ws}].*|\\\.|[^{esc}]*+[{esc}].*)\z"
-    return F.regexp_replace(s, rule, '"$0"')
+    return f"regexp_replace({s}, {sql_str(rule)}, {_QUOTED_MATCH})"
 
 
-def csv_line_expr(cols: list[str], delimiter: str, null_value: str) -> Column:
-    """One CSV record (no line terminator) as a single expression."""
-    return F.concat_ws(
-        delimiter, *[csv_field_expr(qcol(c), delimiter, null_value) for c in cols]
-    )
+def csv_line_expr(cols: list[str], delimiter: str, null_value: str) -> str:
+    """One CSV record (no line terminator) over the named columns, as
+    one SQL expression."""
+    fields = [csv_field_expr(sql_name(c), delimiter, null_value) for c in cols]
+    return f"concat_ws({', '.join([sql_str(delimiter), *fields])})"
 
 
 def _go_csv_field(s: str, delimiter: str) -> str:
@@ -119,10 +121,9 @@ class CSVFormatter(BaseFormatter):
         # only concatenates; quoting parity with Go encoding/csv is in
         # csv_field_expr / _go_csv_field (same rules, two dialects)
         spec = self.spec
-        out = spec.compile(df)
-        cols = [c for c in out.columns if c not in partition_by]
+        cols = [c for c in df.columns if c not in partition_by]
         line = csv_line_expr(cols, spec.delimiter, spec.resolved_null(""))
-        return out.select(*[qcol(c) for c in partition_by], line.alias("value"))
+        return spec.compile(df).selectExpr(*map(sql_name, partition_by), f"{line} AS value")
 
     # -- scale path --------------------------------------------------------------
     def write(

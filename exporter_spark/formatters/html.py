@@ -10,21 +10,26 @@ The template below is our own; it reproduces the reference's
 *structure* (doc skeleton, sticky thead, name+type header cells, null
 span), not its bytes.
 
-Record: each ``<tr>`` is a single Catalyst concat expression
-(JVM-side). Scale path writes the ``<tr>`` strings as text part files
-plus ``_header.html`` / ``_footer.html`` companions so a downstream cat
-can assemble the document without re-reading data.
+Record: each ``<tr>`` is a single concat expression, SQL text
+evaluated JVM-side. Scale path writes the ``<tr>`` strings as text
+part files plus ``_header.html`` / ``_footer.html`` companions so a
+downstream cat can assemble the document without re-reading data.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from exporter_spark import fsio
-from exporter_spark.formatters.base import BaseFormatter, Framing, qcol, splice_document
+from exporter_spark.formatters.base import (
+    BaseFormatter,
+    Framing,
+    splice_document,
+    sql_name,
+    sql_str,
+)
 
 NULL_SPAN = '<span style="color:#aaaaaa;">[NULL]</span>'
 
@@ -41,23 +46,20 @@ tr:hover td { background: #fafafa; }
 """
 
 
-def html_row_expr(cols: list[str], null_s: str = NULL_SPAN) -> Column:
-    """One ``<tr>`` per row as a single Catalyst concat over display
-    strings (codec/html/html.go:126-168 parity): each cell is
-    ``<td>value</td>`` with NULL rendered as ``null_s`` (the gray
-    span by default — html.go:36,176-180) and values NOT HTML-escaped
-    (html.go:160, the documented parity quirk). Module-level twin of
-    csv.csv_line_expr / xml.xml_row_expr so the record semantics are
-    oracle-checkable independent of the document framing. Like those
-    two, it references each column once (see csv_field_expr), so an
-    ordered limit plans as one TakeOrderedAndProject job."""
-    parts: list[Column] = [F.lit("<tr>")]
-    for c in cols:
-        parts.append(F.lit("<td>"))
-        parts.append(F.coalesce(qcol(c), F.lit(null_s)))
-        parts.append(F.lit("</td>"))
-    parts.append(F.lit("</tr>"))
-    return F.concat(*parts)
+def html_row_expr(cols: list[str], null_s: str = NULL_SPAN) -> str:
+    """One ``<tr>`` per row as a single concat over the named display
+    columns, as SQL text (codec/html/html.go:126-168 parity): each
+    cell is ``<td>value</td>`` with NULL rendered as ``null_s`` (the
+    gray span by default — html.go:36,176-180) and values NOT
+    HTML-escaped (html.go:160, the documented parity quirk).
+    Module-level twin of csv.csv_line_expr / xml.xml_row_expr so the
+    record semantics are oracle-checkable independent of the document
+    framing. Like those two, it references each column once (see
+    csv_field_expr), so an ordered limit plans as one
+    TakeOrderedAndProject job."""
+    null_lit = sql_str(null_s)
+    cells = [f"'<td>', coalesce({sql_name(c)}, {null_lit}), '</td>'" for c in cols]
+    return "concat(" + ", ".join(["'<tr>'", *cells, "'</tr>'"]) + ")"
 
 
 class HTMLFormatter(BaseFormatter):
@@ -97,10 +99,9 @@ class HTMLFormatter(BaseFormatter):
     def records(self, df: DataFrame, partition_by: Sequence[str] = ()) -> DataFrame:
         if partition_by:
             raise ValueError("HTML sink does not support partitioned layout")
-        out = self.spec.compile(df)
         # WithCustomNULL (html.go:74-78); default is the gray span
-        null_s = self.spec.resolved_null(NULL_SPAN)
-        return out.select(html_row_expr(out.columns, null_s).alias("value"))
+        row = html_row_expr(df.columns, self.spec.resolved_null(NULL_SPAN))
+        return self.spec.compile(df).selectExpr(f"{row} AS value")
 
     # -- scale path --------------------------------------------------------------
     def write(

@@ -22,10 +22,10 @@ import math
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from exporter_spark.formatters.base import BaseFormatter, Framing, qcol
-from exporter_spark.functions.tostring import _go_fixed_repr
+from exporter_spark.formatters.base import BaseFormatter, Framing, sql_name, sql_str
+from exporter_spark.functions.tostring import _go_fixed_repr, _rfc3339nano, go_float_fn
 
 # empty result ⇒ empty output, not "[]" (json.go:94-98)
 _NDJSON = Framing("", "\n", "\n")
@@ -85,114 +85,106 @@ def _json_token(v) -> str:
     return json.dumps(str(v), ensure_ascii=False)
 
 
-def _json_fragment(col, dt):
-    """Raw JSON token for one column as a Catalyst expression,
-    matching ``_json_token``'s rendering (the fidelity serializer):
-    Go-style shortest floats ("11", not "11.0") via the go-float UDF,
-    RFC3339Nano timestamps, Jackson-escaped strings (extracted from
-    ``to_json(array(col))`` so escaping stays JVM-side, with the
+# Nested timestamps keep full microsecond precision (the default
+# format truncates to milliseconds — silent data loss, not just
+# rendering drift); NULL struct fields / map values stay.
+_NESTED_JSON_OPTIONS = {
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'",
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "ignoreNullFields": "false",
+}
+
+
+def _quoted_escaped(c: str) -> str:
+    """``c`` as a Jackson-escaped JSON string token, with the
     uppercase-hex control escapes Jackson emits folded to the fidelity
-    serializer's lowercase). Nested arrays/structs render via
-    ``to_json`` with NULL fields preserved (``ignoreNullFields`` is
-    false, matching the NDJSON writer path) and full-microsecond
-    timestamps; three documented divergences from the fidelity
-    serializer remain inside nested values: map keys keep their stored
-    order (``_json_token`` sorts them), floats render Jackson-style
-    ("11.0") rather than Go-style ("11"), and timestamp fractions are
-    zero-padded to six digits rather than zero-trimmed. Top-level
-    columns are exact; callers needing byte parity on nested
+    serializer's lowercase."""
+    j = f"to_json(array({c}))"  # ["escaped"] — strip the brackets
+    j = f"substr({j}, 2, (length({j}) - 2))"
+    # Jackson writes \\u-escaped control chars with UPPERCASE hex;
+    # the fidelity path's json.dumps writes lowercase. Only nine
+    # sequences can differ (\\b \\t \\n \\f \\r have short forms).
+    # A blind substring replace would also down-case literal text
+    # like "\\u000B" (whose backslash Jackson doubles), so first
+    # hide escaped-backslash pairs behind a sentinel: Jackson
+    # output contains no RAW control characters (they are all
+    # escaped), making \\x01 a collision-free choice. Gated on a
+    # cheap contains() probe — real text almost never carries raw
+    # control characters, so the fold chain almost never runs.
+    sentinel, pair = sql_str("\x01"), sql_str("\\\\")
+    folded = f"replace({j}, {pair}, {sentinel})"
+    for seq in ("000B", "000E", "000F", "001A", "001B", "001C", "001D", "001E", "001F"):
+        upper, lower = sql_str("\\u" + seq), sql_str("\\u" + seq.lower())
+        folded = f"replace({folded}, {upper}, {lower})"
+    folded = f"replace({folded}, {sentinel}, {pair})"
+    probe = sql_str("\\u00")
+    return f"CASE WHEN contains({j}, {probe}) THEN {folded} ELSE {j} END"
+
+
+def _json_fragment(c: str, dt: T.DataType, go_float: str) -> str:
+    """Raw JSON token for the value ``c`` as SQL text, matching
+    ``_json_token``'s rendering (the fidelity serializer): Go-style
+    shortest floats ("11", not "11.0") via the go-float renderer named
+    ``go_float``, RFC3339Nano timestamps, Jackson-escaped strings
+    (``_quoted_escaped``, so escaping stays JVM-side). Nested
+    arrays/structs render via ``to_json`` with NULL fields preserved
+    (``ignoreNullFields`` is false, matching the NDJSON writer path)
+    and full-microsecond timestamps; three documented divergences from
+    the fidelity serializer remain inside nested values: map keys keep
+    their stored order (``_json_token`` sorts them), floats render
+    Jackson-style ("11.0") rather than Go-style ("11"), and timestamp
+    fractions are zero-padded to six digits rather than zero-trimmed.
+    Top-level columns are exact; callers needing byte parity on nested
     float/timestamp values should use the fidelity path."""
-    from pyspark.sql import types as T
-
-    from exporter_spark.functions.tostring import go_float_str
-
-    def _quoted_escaped(c):
-        j = F.to_json(F.array(c))  # ["escaped"] — strip the brackets
-        j = j.substr(F.lit(2), F.length(j) - F.lit(2))
-        # Jackson writes \\u-escaped control chars with UPPERCASE hex;
-        # the fidelity path's json.dumps writes lowercase. Only nine
-        # sequences can differ (\\b \\t \\n \\f \\r have short forms).
-        # A blind substring replace would also down-case literal text
-        # like "\\u000B" (whose backslash Jackson doubles), so first
-        # hide escaped-backslash pairs behind a sentinel: Jackson
-        # output contains no RAW control characters (they are all
-        # escaped), making \\x01 a collision-free choice. Gated on a
-        # cheap contains() probe — real text almost never carries raw
-        # control characters, so the fold chain almost never runs.
-        sentinel = "\x01"
-        folded = F.replace(j, F.lit("\\\\"), F.lit(sentinel))
-        for seq in ("000B", "000E", "000F", "001A", "001B", "001C", "001D",
-                    "001E", "001F"):
-            folded = F.replace(
-                folded, F.lit("\\u" + seq), F.lit("\\u" + seq.lower())
-            )
-        folded = F.replace(folded, F.lit(sentinel), F.lit("\\\\"))
-        return F.when(j.contains("\\u00"), folded).otherwise(j)
-
     if isinstance(dt, (T.StringType, T.BinaryType)):
-        frag = _quoted_escaped(col)
+        frag = _quoted_escaped(c)
     elif isinstance(dt, T.BooleanType):
-        frag = F.when(col, F.lit("true")).otherwise(F.lit("false"))
+        frag = f"CASE WHEN {c} THEN 'true' ELSE 'false' END"
     elif isinstance(dt, (T.FloatType, T.DoubleType)):
         # NaN/Inf: Go's encoding/json errors — so does the fidelity
         # serializer; the distributed twin must fail loudly too, not
         # silently emit an unparseable bare NaN token
-        d = col.cast("double")
-        frag = F.when(
-            F.isnan(d) | (F.abs(d) == F.lit(float("inf"))),
-            F.raise_error(F.lit("json: unsupported value: NaN/Inf")),
-        ).otherwise(go_float_str(d))
+        d = f"CAST({c} AS DOUBLE)"
+        frag = (
+            f"CASE WHEN (isnan({d}) OR (abs({d}) = CAST('Infinity' AS DOUBLE)))"
+            f" THEN raise_error('json: unsupported value: NaN/Inf') ELSE {go_float}({d}) END"
+        )
     elif isinstance(dt, T.TimestampType):
-        from exporter_spark.functions.tostring import _rfc3339nano
-
-        frag = F.concat(F.lit('"'), _rfc3339nano(col), F.lit('"'))
+        frag = f"concat('\"', {_rfc3339nano(c)}, '\"')"
     elif isinstance(dt, T.TimestampNTZType):
         # naive timestamps are trusted UTC (engine contract), matching
         # _rfc3339nano_py's rendering of naive datetimes
-        frag = F.concat(
-            F.lit('"'),
-            F.replace(col.cast("string"), F.lit(" "), F.lit("T")),
-            F.lit('Z"'),
-        )
+        frag = f"concat('\"', replace(CAST({c} AS STRING), ' ', 'T'), 'Z\"')"
     elif isinstance(dt, T.DateType):
-        frag = F.concat(F.lit('"'), F.date_format(col, "yyyy-MM-dd"), F.lit('"'))
+        frag = f"concat('\"', date_format({c}, 'yyyy-MM-dd'), '\"')"
     elif isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        frag = col.cast("string")
+        frag = f"CAST({c} AS STRING)"
     elif isinstance(dt, (T.ArrayType, T.StructType, T.MapType)):
-        # NULL struct fields / map values must stay (the NDJSON writer
-        # path sets the same option); nested timestamps keep full
-        # microsecond precision (the default format truncates to
-        # milliseconds — silent data loss, not just rendering drift)
-        frag = F.to_json(
-            col,
-            {
-                "ignoreNullFields": "false",
-                "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-                "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'",
-            },
-        )
+        options = ", ".join(f"'{k}', {sql_str(v)}" for k, v in _NESTED_JSON_OPTIONS.items())
+        frag = f"to_json({c}, map({options}))"
     else:
         # every other scalar (Decimal included) mirrors _json_token's
         # fallthrough: the value's string form as a QUOTED JSON string
         # (a bare to_json on a scalar column would not even plan)
-        frag = _quoted_escaped(col.cast("string"))
-    return F.when(col.isNull(), F.lit("null")).otherwise(frag)
+        frag = _quoted_escaped(f"CAST({c} AS STRING)")
+    return f"CASE WHEN ({c} IS NULL) THEN 'null' ELSE {frag} END"
 
 
-def json_line_expr(schema, cols: list[str]):
-    """One NDJSON object per row as a single Catalyst expression —
-    the executor-side twin of ``JSONFormatter.stream_rows`` (same bytes,
-    serialized in parallel instead of on the driver)."""
+def json_line_expr(schema: T.StructType, cols: list[str], go_float: str) -> str:
+    """One NDJSON object per row as one SQL expression — the
+    executor-side twin of ``JSONFormatter.stream_rows`` (same bytes,
+    serialized in parallel instead of on the driver). ``go_float`` is
+    ``go_float_fn`` of the frame's session."""
     by_name = {f.name: f.dataType for f in schema.fields}
     if not cols:
-        return F.lit("{}")  # the '{' prefix below rides the first column
+        return "'{}'"  # the '{' prefix below rides the first column
     parts = []
     for i, c in enumerate(cols):
         prefix = ("{" if i == 0 else ",") + json.dumps(c, ensure_ascii=False) + ":"
-        parts.append(F.lit(prefix))
-        parts.append(_json_fragment(qcol(c), by_name[c]))
-    parts.append(F.lit("}"))
-    return F.concat(*parts)
+        parts.append(sql_str(prefix))
+        parts.append(_json_fragment(sql_name(c), by_name[c], go_float))
+    parts.append("'}'")
+    return f"concat({', '.join(parts)})"
 
 
 def _render_temporals(out: DataFrame) -> DataFrame:
@@ -203,34 +195,20 @@ def _render_temporals(out: DataFrame) -> DataFrame:
     driver's OS-local timezone and shift instants on non-UTC drivers;
     the distributed writer has no trimming timestampFormat at all.
     Both paths share this projection, so they stay byte-identical."""
-    from pyspark.sql import types as T
-
-    from exporter_spark.functions.tostring import _rfc3339nano
-
-    exprs = []
-    changed = False
-    for i, f in enumerate(out.schema.fields):
-        # qcol, not out[i]: positional access still parses the name
-        # (Dataset.apply) and fails on dotted/backticked columns
-        c = qcol(f.name)
+    rendered = {}
+    for f in out.schema.fields:
+        c = sql_name(f.name)
         if isinstance(f.dataType, T.TimestampType):
-            exprs.append(_rfc3339nano(c).alias(f.name))
-            changed = True
+            rendered[f.name] = f"{_rfc3339nano(c)} AS {c}"
         elif isinstance(f.dataType, T.TimestampNTZType):
             # naive timestamps are trusted UTC (engine contract); the
             # native writer would truncate to ms and omit the Z
-            exprs.append(
-                F.concat(
-                    F.replace(c.cast("string"), F.lit(" "), F.lit("T")), F.lit("Z")
-                ).alias(f.name)
-            )
-            changed = True
+            rendered[f.name] = f"concat(replace(CAST({c} AS STRING), ' ', 'T'), 'Z') AS {c}"
         elif isinstance(f.dataType, T.DateType):
-            exprs.append(F.date_format(c, "yyyy-MM-dd").alias(f.name))
-            changed = True
-        else:
-            exprs.append(c)
-    return out.select(*exprs) if changed else out
+            rendered[f.name] = f"date_format({c}, 'yyyy-MM-dd') AS {c}"
+    if not rendered:
+        return out
+    return out.selectExpr(*[rendered.get(n) or sql_name(n) for n in out.columns])
 
 
 class JSONFormatter(BaseFormatter):
@@ -253,13 +231,10 @@ class JSONFormatter(BaseFormatter):
             )
         # df[name] / df[i] both resolve BY NAME in PySpark, so true
         # positional selection needs a rename pass: unique temp names,
-        # select the kept positions, restore the real names.
+        # then the kept positions under their real names.
         last = {c: i for i, c in enumerate(cols)}
-        keep = sorted(last.values())
         tmp = out.toDF(*[f"__c{i}__" for i in range(len(cols))])
-        return tmp.select(*[f"__c{i}__" for i in keep]).toDF(
-            *[cols[i] for i in keep]
-        )
+        return tmp.selectExpr(*[f"__c{i}__ AS {sql_name(cols[i])}" for i in sorted(last.values())])
 
     def framing(self, df: DataFrame) -> Framing:
         return _NDJSON if self.spec.newline_delimited else _ARRAY
@@ -267,8 +242,12 @@ class JSONFormatter(BaseFormatter):
     def records(self, df: DataFrame, partition_by: Sequence[str] = ()) -> DataFrame:
         out = self._dedup_columns(self.spec.compile_raw(df))
         cols = sorted(out.columns) if self.spec.sort_keys else out.columns
-        line = json_line_expr(out.schema, [c for c in cols if c not in partition_by])
-        return out.select(*[qcol(c) for c in partition_by], line.alias("value"))
+        line = json_line_expr(
+            out.schema,
+            [c for c in cols if c not in partition_by],
+            go_float_fn(df.sparkSession),
+        )
+        return out.selectExpr(*map(sql_name, partition_by), f"{line} AS value")
 
     def stream_rows(self, df: DataFrame) -> tuple[DataFrame, Callable[[Row], str]]:
         """The fidelity stream renders each raw row on the driver with
@@ -276,12 +255,13 @@ class JSONFormatter(BaseFormatter):
         renders top-level doubles through the go-float pandas UDF, and
         a small export would pay the Python workers' start-up for it."""
         spec = self.spec
-        out = _render_temporals(self._dedup_columns(spec.compile_raw(df)))
+        out = self._dedup_columns(spec.compile_raw(df))
         # key order and the '"name":' prefixes are row-invariant —
         # computed once, not per row of the single-stream loop
         names = sorted(out.columns) if spec.sort_keys else out.columns
         keys = [(json.dumps(c, ensure_ascii=False) + ":", c) for c in names]
-        return out, lambda row: "{" + ",".join(k + _json_token(row[c]) for k, c in keys) + "}"
+        render = lambda row: "{" + ",".join(k + _json_token(row[c]) for k, c in keys) + "}"  # noqa: E731
+        return _render_temporals(out), render
 
     # -- scale path --------------------------------------------------------------
     def write(
@@ -301,8 +281,7 @@ class JSONFormatter(BaseFormatter):
             self._dedup_columns(spec.compile_raw(self._spread_unordered(df, _spread)))
         )
         if spec.sort_keys:
-            # qcol: a plain string select parses the names
-            out = out.select(*[qcol(c) for c in sorted(out.columns)])
+            out = out.selectExpr(*map(sql_name, sorted(out.columns)))
         writer = out.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)

@@ -8,8 +8,8 @@ column names (the reference does not sanitize — xml.go:116-119 — we
 keep that behavior on the fidelity path and document that the scale
 path, Spark's native XML writer, sanitizes).
 
-Record: the entire row string is built as ONE Catalyst expression
-(concat of per-column fragments), so escaping runs JVM-side inside
+Record: the entire row string is ONE expression (concat of per-column
+fragments), built as SQL text, so escaping runs JVM-side inside
 codegen, on the fidelity stream and the part files alike.
 """
 
@@ -17,11 +17,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from exporter_spark.formatters.base import BaseFormatter, Framing, jvm_str, qcol
+from exporter_spark.formatters.base import BaseFormatter, Framing, jvm_str, sql_name, sql_str
 
 _DECLARATION = '<?xml version="1.0" encoding="UTF-8"?>\n'
 
@@ -66,10 +65,11 @@ _XML_INVALID_REPL = "�" * len(_XML_INVALID)
 _XML_INVALID_TABLE = str.maketrans(dict.fromkeys(_XML_INVALID, "�"))
 
 
-def xml_escape_expr(col: Column) -> Column:
+def xml_escape_expr(c: str) -> str:
+    """Go xml.EscapeText of the value ``c``, as SQL text."""
     for raw, ent in _XML_ESCAPES:
-        col = F.replace(col, F.lit(raw), F.lit(ent))
-    return F.translate(col, _XML_INVALID, _XML_INVALID_REPL)
+        c = f"replace({c}, {sql_str(raw)}, {sql_str(ent)})"
+    return f"translate({c}, {sql_str(_XML_INVALID)}, {sql_str(_XML_INVALID_REPL)})"
 
 
 def xml_escape(s: str) -> str:
@@ -89,22 +89,22 @@ def xml_row_expr(
     tags: list[str],
     row_tag: str = "row",
     escape_safe: set[str] | frozenset[str] = frozenset(),
-) -> Column:
-    """One ``<row>...</row>`` record as a single Catalyst expression;
-    NULL cells omit their element (xml.go:113-115): its ``concat`` is
-    NULL exactly when the cell is. Each column is referenced once, so
-    CollapseProject inlines the display projection and an ordered
-    limit plans as one TakeOrderedAndProject job. Columns named in
-    ``escape_safe`` skip the 8-entity replace chain — their display
-    strings provably contain no escapable characters (numeric,
-    boolean, temporal renderings)."""
-    parts = [F.lit(f"<{row_tag}>")]
+) -> str:
+    """One ``<row>...</row>`` record over the named display columns as
+    one SQL expression; NULL cells omit their element (xml.go:113-115):
+    its ``concat`` is NULL exactly when the cell is. Each column is
+    referenced once, so CollapseProject inlines the display projection
+    and an ordered limit plans as one TakeOrderedAndProject job.
+    Columns named in ``escape_safe`` skip the 8-entity replace chain —
+    their display strings provably contain no escapable characters
+    (numeric, boolean, temporal renderings)."""
+    parts = [sql_str(f"<{row_tag}>")]
     for c, tag in zip(cols, tags):
-        body = qcol(c) if c in escape_safe else xml_escape_expr(qcol(c))
-        element = F.concat(F.lit(f"<{tag}>"), body, F.lit(f"</{tag}>"))
-        parts.append(F.coalesce(element, F.lit("")))
-    parts.append(F.lit(f"</{row_tag}>"))
-    return F.concat(*parts)
+        body = sql_name(c) if c in escape_safe else xml_escape_expr(sql_name(c))
+        element = f"concat({sql_str(f'<{tag}>')}, {body}, {sql_str(f'</{tag}>')})"
+        parts.append(f"coalesce({element}, '')")
+    parts.append(sql_str(f"</{row_tag}>"))
+    return f"concat({', '.join(parts)})"
 
 
 # Display strings of these source types are drawn from
@@ -150,22 +150,23 @@ class XMLFormatter(BaseFormatter):
         spec = self.spec
         # declaration and root only once a row exists: empty input /
         # limit=0 ⇒ no output at all (xml.go:68-70)
+        root = jvm_str(spec.root_tag)  # as the row tag reaches the JVM
         return Framing(
-            (_DECLARATION if spec.declaration else "") + f"<{spec.root_tag}>\n",
+            (_DECLARATION if spec.declaration else "") + f"<{root}>\n",
             "\n",
-            f"\n</{spec.root_tag}>\n",
+            f"\n</{root}>\n",
         )
 
     def records(self, df: DataFrame, partition_by: Sequence[str] = ()) -> DataFrame:
         spec = self.spec
         safe = self._escape_safe(df)
-        out = spec.compile(df)
-        tags = spec.header_names(out)
         # hive-style convention: partition columns ride in the
         # directory name, not the row body
-        keep = [(c, t) for c, t in zip(out.columns, tags) if c not in partition_by]
+        keep = [
+            (c, t) for c, t in zip(df.columns, spec.header_names(df)) if c not in partition_by
+        ]
         row = xml_row_expr([c for c, _ in keep], [t for _, t in keep], spec.row_tag, safe)
-        return out.select(*[qcol(c) for c in partition_by], row.alias("value"))
+        return spec.compile(df).selectExpr(*map(sql_name, partition_by), f"{row} AS value")
 
     # -- scale path --------------------------------------------------------------
     def write(

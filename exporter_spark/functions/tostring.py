@@ -21,27 +21,34 @@ Semantics implemented:
   complex (array/map/
   struct)              → JSON; "[]"/"{}"/"null" ⇒ NULL (tostring.go:76-96)
 
-Everything except the Go-exact float path is a JVM-side expression
-(whole-stage-codegen friendly). The Go-exact float formatter needs
-shortest-round-trip digits re-rendered without exponent notation,
-which no Spark builtin produces — it is an Arrow-vectorized pandas
-UDF, opt-in via ``float_mode="go"``. The default ``float_mode="java"``
-uses Spark's CAST (Java ``Double.toString``) and stays fully codegen'd;
-at 100 TB that is the path you want unless byte-parity with the Go
-library is required.
+Expressions are SQL text (``display_expr``; names by ``sql_name``,
+literals by ``sql_str``), and a projection is one ``selectExpr``
+(``project``): every ``F.*`` call costs several py4j round trips, text
+costs one parse. Everything except the Go-exact float path is a
+JVM-side expression (whole-stage-codegen friendly). The Go-exact
+float formatter needs shortest-round-trip digits re-rendered without
+exponent notation, which no Spark builtin produces — it is an
+Arrow-vectorized pandas UDF, opt-in via ``float_mode="go"`` and
+called by its registered name (``go_float_fn``). The default
+``float_mode="java"`` uses Spark's CAST (Java ``Double.toString``)
+and stays fully codegen'd; at 100 TB that is the path you want unless
+byte-parity with the Go library is required.
 """
 
 from __future__ import annotations
 
+import os
+import re
+import string
 from decimal import Decimal
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-__all__ = ["display_expr", "display_columns", "go_float_str"]
+__all__ = ["display_expr", "display_columns", "go_float_str", "project", "sql_name", "sql_str"]
 
 # Go's zero time.Time (tostring.go:67-69: IsZero() ⇒ NULL).
 _GO_ZERO_TIME = "0001-01-01 00:00:00"
@@ -103,8 +110,9 @@ def _make_go_float_udf():
 go_float_str = _make_go_float_udf()
 
 
-def _go_float_expr(d: Column) -> Column:
-    """The Go-parity renderer as a Column.
+def go_float_fn(spark) -> str:
+    """The SQL name of the Go-parity float renderer on ``spark``,
+    registered on first use.
 
     Default: the Arrow/numpy kernel — numpy's C Dragon4
     (format_float_positional) MEASURED 2.8× faster end-to-end than the
@@ -115,23 +123,95 @@ def _go_float_expr(d: Column) -> Column:
     asymmetric-interval cases) exists for deployments where executor
     Python workers are unavailable — opt in via
     EXPORTER_SPARK_GO_FLOAT_KERNEL=java."""
-    import os
-
     if os.environ.get("EXPORTER_SPARK_GO_FLOAT_KERNEL") == "java":
-        from pyspark.sql import SparkSession
+        try:
+            from exporter_spark.javakernel import ensure_go_float_java
 
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            try:
-                from exporter_spark.javakernel import ensure_go_float_java
-
-                return F.call_udf(ensure_go_float_java(spark), d)
-            except Exception:  # noqa: BLE001 — no JDK / build failure
-                pass
-    return go_float_str(d)
+            return ensure_go_float_java(spark)
+        except Exception:  # noqa: BLE001 — no JDK / build failure
+            pass
+    if not getattr(spark, "_exporter_spark_go_float", False):
+        spark.udf.register("go_float_str", go_float_str)
+        spark._exporter_spark_go_float = True
+    return "go_float_str"
 
 
-def _rfc3339nano(col: Column) -> Column:
+def jvm_str(s: str) -> str:
+    """Project a Python string onto the JVM string domain — what the
+    same value looks like after crossing into a DataFrame.
+
+    CPython strings may carry surrogate CODE POINTS (U+D800-DFFF);
+    JVM/Arrow strings cannot receive them — the transfer encodes each
+    Python code point to UTF-8, where every surrogate (even a
+    high+low sequence that would pair in UTF-16) is individually
+    unencodable and becomes its own U+FFFD. Measured against the real
+    boundary in the round-8 fuzz: '\\ud800\\udfff' arrives as TWO
+    replacement chars, never the combined astral char — so the
+    projection is strictly per-code-point, no pairing. Go strings
+    (the parity target) can't hold surrogates either (invalid
+    UTF-8). The Python formatter twins run BEFORE any JVM boundary
+    (headers, fidelity-stream assembly); without this projection they
+    diverge from their Catalyst-expression counterparts on inputs the
+    pipeline can never actually carry. No-op for any string that ever
+    crossed the boundary."""
+    return _SURROGATE.sub("\ufffd", s)
+
+
+_SURROGATE = re.compile("[\ud800-\udfff]")
+
+
+# Characters a '...' literal carries verbatim whatever
+# spark.sql.parser.escapedStringLiterals says: printable ASCII without
+# the quote, the backslash (an escape only when that conf is false)
+# and '$' (Spark substitutes ${...} in all SQL text it parses).
+_SQL_PLAIN = frozenset(
+    string.ascii_letters + string.digits + " !\"#%&()*+,-./:;<=>?@[]^_`{|}~"
+)
+
+
+def sql_str(s: str) -> str:
+    """A SQL string literal whose value is ``jvm_str(s)`` under either
+    parser setting: plain ``'...'`` when every character is in the
+    safe set, else its UTF-8 bytes as ``CAST(X'..' AS STRING)``, which
+    the optimizer folds back to a literal."""
+    s = jvm_str(s)
+    if _SQL_PLAIN.issuperset(s):
+        return f"'{s}'"
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+
+
+def sql_name(name: str) -> str:
+    """Exact top-level column reference, as SQL text, for a KNOWN
+    column name (from ``df.columns``/schema; user expression strings
+    keep plain parsing). The reference treats names as opaque strings;
+    Spark parses them (``a.b`` is struct access), so the name is
+    backtick-quoted with doubled inner backticks. A name holding ``${``
+    is refused: Spark substitutes ``${...}`` in every SQL text it
+    parses, identifiers included."""
+    if "${" in name:
+        raise ValueError(
+            f"column name {name!r} holds '${{', which Spark's SQL parser"
+            " substitutes; rename the column"
+        )
+    return backticked(name)
+
+
+def backticked(name: str) -> str:
+    """``name`` as Spark's name resolvers read it literally."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def qcol(name: str) -> Column:
+    """``sql_name`` as a Column, for the Column API handed to custom
+    mappers and sort keys; no SQL parser runs, so any name resolves."""
+    return F.col(backticked(name))
+
+
+def _null_else(c: str, expr: str) -> str:
+    return f"CASE WHEN ({c} IS NULL) THEN CAST(NULL AS STRING) ELSE {expr} END"
+
+
+def _rfc3339nano(c: str) -> str:
     """RFC3339Nano with trailing fractional zeros trimmed, per Go
     time.Format(time.RFC3339Nano). Session timezone is UTC ⇒ "Z".
 
@@ -140,97 +220,77 @@ def _rfc3339nano(col: Column) -> Column:
     seconds), so one cast + separator swap replaces the previous
     two-date_format + regexp formulation (~40% less render time on a
     one-timestamp-column export; measured sf0.1 lineitem)."""
-    return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
-        F.concat(F.replace(col.cast("string"), F.lit(" "), F.lit("T")), F.lit("Z"))
-    )
+    return _null_else(c, f"concat(replace(CAST({c} AS STRING), ' ', 'T'), 'Z')")
 
 
-def display_expr(
-    col: Column,
-    dt: T.DataType,
-    *,
-    float_mode: str = "java",
-) -> Column:
-    """Column expression producing the display string for one column.
+def display_expr(c: str, dt: T.DataType, *, go_float: str | None = None) -> str:
+    """SQL text of the display string of one column; ``c`` is the SQL
+    text of its value (``sql_name`` of a column name).
 
     NULL result ⇔ NULL cell (formatters decide the rendering).
-    float_mode: "java" (CAST, codegen fast path) | "go" (byte-parity
-    with strconv.FormatFloat via Arrow pandas UDF).
+    ``go_float``: None renders floats with Spark's CAST (codegen fast
+    path); the name ``go_float_fn`` returned renders them with byte
+    parity to strconv.FormatFloat via the Arrow pandas UDF.
     """
     if isinstance(dt, T.StringType):
-        return col
-    if isinstance(dt, T.BinaryType):
-        return col.cast("string")  # UTF-8 decode, matches Go string(v)
+        return c
     if isinstance(dt, T.BooleanType):
-        return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
-            F.when(col, "true").otherwise("false")
-        )
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType)):
-        return col.cast("string")
+        return _null_else(c, f"CASE WHEN {c} THEN 'true' ELSE 'false' END")
     if isinstance(dt, T.TimestampType):
-        return F.when(
-            col.isNull() | (col == F.to_timestamp(F.lit(_GO_ZERO_TIME))),
-            F.lit(None).cast("string"),
-        ).otherwise(_rfc3339nano(col))
+        return (
+            f"CASE WHEN (({c} IS NULL) OR ({c} = to_timestamp('{_GO_ZERO_TIME}')))"
+            f" THEN CAST(NULL AS STRING) ELSE {_rfc3339nano(c)} END"
+        )
     if isinstance(dt, T.DateType):
         # Go has no date type (time.Time covers it); ISO date chosen.
-        return F.date_format(col, "yyyy-MM-dd")
+        return f"date_format({c}, 'yyyy-MM-dd')"
     if isinstance(dt, (T.FloatType, T.DoubleType)):
-        d = col.cast("double")
-        if float_mode == "go":
-            return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
-                _go_float_expr(d)
-            )
-        return d.cast("string")
+        d = f"CAST({c} AS DOUBLE)"
+        if go_float is not None:
+            return _null_else(c, f"{go_float}({d})")
+        return f"CAST({d} AS STRING)"
     if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
-        j = F.to_json(col)
+        j = f"to_json({c})"
         # tostring.go:80-83 / :92-95 — empty/null JSON payloads are NULL cells.
-        return F.when(j.isin("[]", "{}", "null") | j.isNull(), F.lit(None)).otherwise(j)
-    # Fallback mirrors the reference's final fmt.Sprintf("%v") (tostring.go:96).
-    return col.cast("string")
-
-
-def qcol(name: str) -> Column:
-    """Exact top-level column reference for a KNOWN column name.
-
-    The reference treats column names as opaque strings; Spark parses
-    them — ``F.col("a.b")`` reads the dot as struct access, and even
-    positional ``df[i]`` routes through ``Dataset.apply``'s name
-    parser, which rejects an embedded backtick outright. Backtick-
-    quote with doubled inner backticks (the SQL identifier escape)
-    and every name resolves literally. Use ONLY for names taken from
-    ``df.columns``/schema — user expression strings (struct access,
-    SQL fragments) must keep plain parsing."""
-    return F.col("`" + name.replace("`", "``") + "`")
+        return (
+            f"CASE WHEN (({j} IN ('[]', '{{}}', 'null')) OR ({j} IS NULL))"
+            f" THEN NULL ELSE {j} END"
+        )
+    # binary (UTF-8 decode, matches Go string(v)), ints and decimals, and
+    # the fallback mirroring the reference's fmt.Sprintf("%v") (tostring.go:96)
+    return f"CAST({c} AS STRING)"
 
 
 def display_columns(
-    df,
+    df: DataFrame,
     *,
     float_mode: str = "java",
     formatters: dict[str, Column] | None = None,
-    timestamp_mode: str = "rfc3339nano",
-    only: list[str] | None = None,
-) -> list[Column]:
-    """One display-string Column per df column, preserving names.
+) -> list[str | Column]:
+    """One display-string projection item per df column, preserving
+    names, for ``project``: SQL text, or the Column a formatter gave.
 
     ``formatters`` maps column name → ready Column expression and
     overrides the default (resolved by ExportSpec from its column- and
     type-keyed mapper registries — the reference's custom-mapper
-    dispatch, codec/csv/csv.go:195-205). ``only`` restricts output to
-    the named columns (used to exclude internal helper columns like
-    the mapper RowID).
+    dispatch, codec/csv/csv.go:195-205).
     """
     formatters = formatters or {}
-    out = []
-    for i, f in enumerate(df.schema.fields):
-        if only is not None and f.name not in only:
-            continue
+    go = go_float_fn(df.sparkSession) if float_mode == "go" else None
+    out: list[str | Column] = []
+    for f in df.schema.fields:
         if f.name in formatters:
-            expr = formatters[f.name]
+            out.append(formatters[f.name].alias(f.name))
         else:
-            # qcol, not df[i]: positional access still parses the
-            # name (Dataset.apply) and chokes on backticks/dots
-            expr = display_expr(qcol(f.name), f.dataType, float_mode=float_mode)
-        out.append(expr.alias(f.name))
+            name = sql_name(f.name)
+            out.append(f"{display_expr(name, f.dataType, go_float=go)} AS {name}")
     return out
+
+
+def project(df: DataFrame, items: list[str | Column]) -> DataFrame:
+    """``df.select(items)`` where an item is SQL text or a Column: one
+    ``selectExpr`` when all are text (every projection the engine
+    builds itself), else each text through ``F.expr``."""
+    if all(isinstance(i, str) for i in items):
+        return df.selectExpr(*items)
+    return df.select(*[F.expr(i) if isinstance(i, str) else i for i in items])

@@ -102,10 +102,6 @@ def char_shingles(text_col: str, n: int) -> Column:
     return F.expr(shingle_sql(text_col, n))
 
 
-def word_tokens(text_col: str) -> Column:
-    return F.expr(f"filter(split({text_col}, '\\\\s+'), x -> x != '')")
-
-
 # ---------------------------------------------------------------- minhash
 
 # Carter-Wegman universal hashing over the Mersenne prime 2^31-1: one

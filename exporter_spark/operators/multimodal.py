@@ -34,7 +34,6 @@ instead of fabricating plausible-looking data.
 
 from __future__ import annotations
 
-import hashlib
 import warnings
 from typing import Callable, Iterator
 
@@ -64,17 +63,6 @@ def media_schema(id_type: T.DataType = T.LongType()) -> T.StructType:
             T.StructField("meta", MEDIA_META),
         ]
     )
-
-
-def _fake_features(payload: bytes, n: int) -> np.ndarray:
-    """Deterministic stand-in for a real decode→embed step: n floats
-    in [0,1) seeded from the payload digest."""
-    h = hashlib.sha256(payload or b"").digest()
-    out = np.empty(n, dtype=np.float32)
-    for i in range(n):
-        chunk = hashlib.sha256(h + i.to_bytes(4, "big")).digest()[:8]
-        out[i] = int.from_bytes(chunk, "big") / 2**64
-    return out
 
 
 def stub_decoder(n_features: int = 8) -> Callable[[bytes], np.ndarray]:

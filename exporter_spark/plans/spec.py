@@ -10,7 +10,8 @@ csv.go:170-185 ordering).
 
 Design stance: the declarative members (``filter``, ``limit``,
 ``formatters``) compile to Catalyst expressions so pushdown/pruning
-still work; the imperative ``preprocessor`` escape hatch runs as an
+still work, and the display projection is SQL text applied with one
+``selectExpr``; the imperative ``preprocessor`` escape hatch runs as an
 Arrow-batched hook over already-stringified rows and is the slow path,
 exactly like the reference's per-row Go hook.
 """
@@ -21,11 +22,11 @@ from collections.abc import Callable
 from dataclasses import dataclass, field, replace
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from exporter_spark.functions.tostring import display_columns, display_expr, qcol
+from exporter_spark.functions.tostring import display_columns, project, qcol
 from exporter_spark.sources.meta import driver_of
 
 # preprocessor: (row_id | None, {col: display_str|None}) -> (dict | None)
@@ -192,7 +193,8 @@ class ExportSpec:
     def compile(self, df: DataFrame) -> DataFrame:
         """source df → display-string df with filter → preprocessor →
         post-filter limit applied, in the reference's ordering
-        (codec/csv/csv.go:156-188)."""
+        (codec/csv/csv.go:156-188). The result keeps the source's
+        column names, in order."""
         return self._compile(df, display=True)
 
     def compile_raw(self, df: DataFrame) -> DataFrame:
@@ -202,6 +204,9 @@ class ExportSpec:
         return self._compile(df, display=False)
 
     def _compile(self, df: DataFrame, *, display: bool) -> DataFrame:
+        # the source's schema describes every stage below: filter and
+        # sort keep it, and the RowID column is never an output
+        src = df
         if self.filter is not None:
             df = df.filter(self.filter)
         if self.order_by:
@@ -209,30 +214,25 @@ class ExportSpec:
             # (backtick-quoted — F.col would parse a dot in the name
             # as struct access and fail); anything else keeps plain
             # parsing so "s.a" struct-field ordering still works
-            cols = set(df.columns)
+            cols = set(src.columns)
             df = df.orderBy(
                 *[
                     qcol(c) if isinstance(c, str) and c in cols else c
                     for c in self.order_by
                 ]
             )
-        out_cols = df.columns
         rid, df = self._with_row_id(df)
-        resolved = self._resolve_formatters(df, rid, out_cols)
+        resolved = self._resolve_formatters(src, rid)
         if display:
-            out = df.select(
-                display_columns(
-                    df,
-                    float_mode=self.float_mode,
-                    formatters=resolved,
-                    only=out_cols,
-                )
+            out = project(
+                df,
+                display_columns(src, float_mode=self.float_mode, formatters=resolved),
             )
         else:
             out = df
             for name, expr in resolved.items():
                 out = out.withColumn(name, expr)
-            if "__rid__" in out.columns:
+            if rid is not None:
                 out = out.drop("__rid__")
         if self.preprocessor is not None:
             out = self._apply_preprocessor(out, schema=None if display else out.schema)
@@ -258,38 +258,40 @@ class ExportSpec:
                 return fn
         return None
 
-    def _with_row_id(self, df: DataFrame) -> tuple[Column, DataFrame]:
+    def _with_row_id(self, df: DataFrame) -> tuple[Column | None, DataFrame]:
         """RowID column for mapper CellMeta: 1-based output row number
         under order_by (same single-window fidelity trick as the
-        preprocessor), NULL otherwise. Only materialized when some
-        registered mapper is a callable (can observe it)."""
+        preprocessor), None (NULL to mappers) otherwise. Only
+        materialized when some registered mapper is a callable (can
+        observe it)."""
         needs = bool(self.type_formatters) or any(
             not isinstance(v, Column) and callable(v)
             for v in self.formatters.values()
         )
         if needs and self.order_by:
-            return F.col("__rid__"), df.withColumn(
-                "__rid__",
-                F.row_number()
-                .over(Window.orderBy(F.monotonically_increasing_id()))
-                .cast("long"),
+            return F.col("__rid__"), df.selectExpr(
+                "*",
+                "CAST(row_number() OVER (ORDER BY monotonically_increasing_id()) AS BIGINT)"
+                " AS __rid__",
             )
-        return F.lit(None).cast("long"), df
+        return None, df
 
     def _resolve_formatters(
-        self, df: DataFrame, rid: Column, out_cols: list[str]
+        self, df: DataFrame, rid: Column | None = None
     ) -> dict[str, Column]:
+        """Each mapped column's mapper result, as a Column; ``rid`` is
+        the RowID mappers see (None: NULL)."""
         resolved: dict[str, Column] = {}
         drv = driver_of(df)
-        for i, fld in enumerate(df.schema.fields):
-            if fld.name not in out_cols:
-                continue
+        for fld in df.schema.fields:
             m = self._mapper_for(fld)
             if m is None:
                 continue
             if isinstance(m, Column):
                 resolved[fld.name] = m
             else:
+                if rid is None:
+                    rid = F.lit(None).cast("long")
                 meta = CellMeta(row_id=rid, driver=drv, column=fld)
                 # qcol: positional df[i] still parses the name
                 col = qcol(fld.name)
@@ -314,12 +316,11 @@ class ExportSpec:
             # so numbering by them reproduces it; the single window
             # partition makes this the ordered/correctness path only —
             # the distributed path runs with row_id=None.
-            w_df = df.withColumn(
-                "__rid__",
-                F.row_number().over(Window.orderBy(F.monotonically_increasing_id())),
+            w_df = df.selectExpr(
+                "*", "row_number() OVER (ORDER BY monotonically_increasing_id()) AS __rid__"
             )
         else:
-            w_df = df.withColumn("__rid__", F.lit(None).cast("long"))
+            w_df = df.selectExpr("*", "CAST(NULL AS BIGINT) AS __rid__")
 
         def run(iterator):
             for pdf in iterator:

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from exporter_spark.formatters.csv import GO_SPACE_CHARS
-from exporter_spark.functions.tostring import display_columns, display_expr
+from exporter_spark.functions.tostring import display_columns, display_expr, go_float_fn, project
 from exporter_spark.queries._registry import _dsum, _register
 from exporter_spark.sources.files import load_table
 
@@ -112,14 +112,13 @@ _DUCK_VAL = _duck_go_float("value")
 def tostring_events(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
     fields = {f.name: f.dataType for f in e.schema.fields}
-    return e.select(
-        display_expr(F.col("event_id"), fields["event_id"]).alias("event_id"),
-        display_expr(F.col("ts"), fields["ts"]).alias("ts_str"),
-        display_expr(F.col("value"), fields["value"], float_mode="go").alias(
-            "value_str"
-        ),
-        F.col("event_type"),
-        F.col("props"),
+    go = go_float_fn(spark)
+    return e.selectExpr(
+        f"{display_expr('event_id', fields['event_id'])} AS event_id",
+        f"{display_expr('ts', fields['ts'])} AS ts_str",
+        f"{display_expr('value', fields['value'], go_float=go)} AS value_str",
+        "event_type",
+        "props",
     )
 
 
@@ -186,10 +185,8 @@ def csv_lines_events(spark, sf_dir):
     from exporter_spark.formatters.csv import csv_line_expr
 
     e = load_table(spark, sf_dir, "events")
-    disp = e.select(
-        display_columns(e, float_mode="go")
-    )
-    return disp.select(csv_line_expr(disp.columns, ",", "").alias("line"))
+    disp = project(e, display_columns(e, float_mode="go"))
+    return disp.selectExpr(f"{csv_line_expr(e.columns, ',', '')} AS line")
 
 
 def _xml_rows_oracle() -> str:
@@ -213,8 +210,8 @@ def xml_rows_events(spark, sf_dir):
     from exporter_spark.formatters.xml import xml_row_expr
 
     e = load_table(spark, sf_dir, "events")
-    disp = e.select(display_columns(e, float_mode="go"))
-    return disp.select(xml_row_expr(disp.columns, disp.columns).alias("xml_row"))
+    disp = project(e, display_columns(e, float_mode="go"))
+    return disp.selectExpr(f"{xml_row_expr(e.columns, e.columns)} AS xml_row")
 
 
 def _html_rows_oracle() -> str:
@@ -241,8 +238,8 @@ def html_rows_events(spark, sf_dir):
     from exporter_spark.formatters.html import html_row_expr
 
     e = load_table(spark, sf_dir, "events")
-    disp = e.select(display_columns(e, float_mode="go"))
-    return disp.select(html_row_expr(disp.columns).alias("html_row"))
+    disp = project(e, display_columns(e, float_mode="go"))
+    return disp.selectExpr(f"{html_row_expr(e.columns)} AS html_row")
 
 
 @_register(

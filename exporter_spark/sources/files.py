@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from exporter_spark.functions.tostring import sql_name
 from exporter_spark.sources.meta import tag_driver
 
 TABLES = (
@@ -68,21 +69,21 @@ def from_parquet(spark: SparkSession, path: str, table: str | None = None) -> Da
     if tz != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.parquet(path)
-    name = table or os.path.splitext(os.path.basename(path))[0]
-    for c in _NANOS_COLS.get(name, []):
-        if c in df.columns and isinstance(df.schema[c].dataType, T.LongType):
+    nanos = _NANOS_COLS.get(table or os.path.splitext(os.path.basename(path))[0], [])
+    converted = {}
+    for f in df.schema.fields:
+        if f.name in nanos and isinstance(f.dataType, T.LongType):
             # integer div — float division would round 64-bit nanos
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    # Parquet timestamps without isAdjustedToUTC land as TIMESTAMP_NTZ,
-    # which many time functions (unix_micros, window, ...) reject. The
-    # engine runs with session.timeZone=UTC, so casting NTZ → session
-    # timestamp is value-preserving and matches DuckDB's naive reads.
-    for field in df.schema.fields:
-        if isinstance(field.dataType, T.TimestampNTZType):
-            # backtick-quoted: a dotted column name must resolve as a
-            # column, not a struct-field path
-            ref = F.col("`" + field.name.replace("`", "``") + "`")
-            df = df.withColumn(field.name, ref.cast(T.TimestampType()))
+            converted[f.name] = F.expr(f"timestamp_micros({sql_name(f.name)} div 1000)")
+        elif isinstance(f.dataType, T.TimestampNTZType):
+            # Parquet timestamps without isAdjustedToUTC land as
+            # TIMESTAMP_NTZ, which many time functions (unix_micros,
+            # window, ...) reject. The engine runs with
+            # session.timeZone=UTC, so casting NTZ → session timestamp
+            # is value-preserving and matches DuckDB's naive reads.
+            converted[f.name] = F.expr(f"CAST({sql_name(f.name)} AS TIMESTAMP_LTZ)")
+    if converted:
+        df = df.withColumns(converted)
     return tag_driver(df, "parquet")
 
 

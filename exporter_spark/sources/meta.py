@@ -13,25 +13,31 @@ answers from the first tagged column it finds and falls back to
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.classic.column import _to_seq
+
+from exporter_spark.functions.tostring import backticked
 
 DRIVER_META_KEY = "exporter.driver"
 
 
 def tag_driver(df: DataFrame, name: str) -> DataFrame:
-    """Stamp every column with the originating driver name. Column
-    references are backtick-quoted so names containing dots (a CSV
-    header like ``price.usd``) resolve as columns, not struct-field
-    paths."""
-    return df.select(
-        [
-            F.col("`" + f.name.replace("`", "``") + "`").alias(
-                f.name, metadata={**(f.metadata or {}), DRIVER_META_KEY: name}
-            )
-            for f in df.schema.fields
-        ]
-    )
+    """Stamp every column with the originating driver name: each
+    distinct metadata built once, columns aliased JVM-side (a few py4j
+    calls per column, not a ``Column.alias`` each). Backtick-quoted, a
+    name with a dot (``price.usd``) resolves as a column."""
+    jvm, jdf = df.sparkSession._jvm, df._jdf  # noqa: SLF001
+    metas: dict[str, object] = {}
+    cols = []
+    for f in df.schema.fields:
+        meta = json.dumps({**(f.metadata or {}), DRIVER_META_KEY: name})
+        if meta not in metas:
+            metas[meta] = jvm.org.apache.spark.sql.types.Metadata.fromJson(meta)
+        ref = jdf.col(backticked(f.name))
+        cols.append(getattr(ref, "as")(f.name, metas[meta]))
+    return DataFrame(jdf.select(_to_seq(df.sparkSession._sc, cols)), df.sparkSession)  # noqa: SLF001
 
 
 def driver_of(df: DataFrame) -> str:

@@ -28,7 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from exporter_spark.formatters.base import BaseFormatter
 from exporter_spark.formatters.csv import csv_writer_options
-from exporter_spark.functions.tostring import display_columns
+from exporter_spark.functions.tostring import display_columns, project
 from exporter_spark.plans.spec import ExportSpec
 
 
@@ -56,12 +56,9 @@ def apply_spec_streaming(df: DataFrame, spec: ExportSpec) -> DataFrame:
         )
     if spec.filter is not None:
         df = df.filter(spec.filter)
-    resolved = spec._resolve_formatters(
-        df, F.lit(None).cast("long"), df.columns
-    )  # mappers run with row_id=NULL (unbounded input has no row number)
-    return df.select(
-        display_columns(df, float_mode=spec.float_mode, formatters=resolved)
-    )
+    # mappers run with row_id=NULL (unbounded input has no row number)
+    resolved = spec._resolve_formatters(df)
+    return project(df, display_columns(df, float_mode=spec.float_mode, formatters=resolved))
 
 
 def stream_export(

@@ -111,16 +111,14 @@ def test_csv_dual_path_quoting_agrees(spark, cells, delimiter, null_value):
     emit byte-identical fields for arbitrary unicode, any delimiter
     and a NULL cell's replacement string — same dual-path contract
     the goldens pin on curated strings."""
-    from pyspark.sql import functions as F
-
     from exporter_spark.formatters.csv import csv_field_expr
 
     cells = cells + _CURATED
     df = spark.createDataFrame([(c,) for c in cells], "raw string")
     got = [
         r["q"]
-        for r in df.select(
-            csv_field_expr(F.col("raw"), delimiter, null_value).alias("q")
+        for r in df.selectExpr(
+            f"{csv_field_expr('raw', delimiter, null_value)} AS q"
         ).collect()
     ]
     assert got == [
@@ -214,17 +212,15 @@ def test_jvm_str_projection():
 
 
 def test_xml_python_twin_matches_expr_table(spark):
-    """xml_escape (Python twin) agrees with xml_escape_expr (Catalyst)
-    on the full adversarial alphabet in one batch."""
-    from pyspark.sql import functions as F
-
+    """xml_escape (Python twin) agrees with xml_escape_expr (the SQL
+    expression) on the full adversarial alphabet in one batch."""
     from exporter_spark.formatters.xml import xml_escape_expr
 
     cells = ["".join(_NASTY), "plain", "", "a\x00b￾￿c", "&<>\"'\t\n\r"]
     df = spark.createDataFrame([(c,) for c in cells], "raw string")
     got = [
         r["e"]
-        for r in df.select(xml_escape_expr(F.col("raw")).alias("e")).collect()
+        for r in df.selectExpr(f"{xml_escape_expr('raw')} AS e").collect()
     ]
     assert got == [xml_escape(c) for c in cells]
 

@@ -78,21 +78,21 @@ def test_fingerprints_read_only_needed_columns(spark):
 def test_java_float_export_has_no_python_eval(spark, sf_dir):
     """The default (float_mode=java) display projection must stay
     fully JVM-side — no Python/Arrow eval stages in the plan."""
-    from exporter_spark.functions.tostring import display_columns
+    from exporter_spark.functions.tostring import display_columns, project
     from exporter_spark.sources.files import load_table
 
     e = load_table(spark, sf_dir, "events")
-    out = e.select(display_columns(e, float_mode="java"))
+    out = project(e, display_columns(e, float_mode="java"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan  # neither Batch- nor Arrow-
 
 
 def test_go_float_uses_arrow_not_row_python(spark, sf_dir):
-    from exporter_spark.functions.tostring import display_columns
+    from exporter_spark.functions.tostring import display_columns, project
     from exporter_spark.sources.files import load_table
 
     e = load_table(spark, sf_dir, "events")
-    out = e.select(display_columns(e, float_mode="go"))
+    out = project(e, display_columns(e, float_mode="go"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan  # vectorized
     assert "BatchEvalPython" not in plan  # never row-at-a-time

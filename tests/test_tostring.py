@@ -12,12 +12,15 @@ from exporter_spark.functions.tostring import (
     _go_fixed_repr,
     display_columns,
     display_expr,
+    go_float_fn,
+    project,
 )
 
 
-def _one(spark, value, spark_type, **kw):
+def _one(spark, value, spark_type, float_mode="java"):
     df = spark.createDataFrame([(value,)], T.StructType([T.StructField("v", spark_type)]))
-    return df.select(display_expr(F.col("v"), spark_type, **kw).alias("s")).first()["s"]
+    go = go_float_fn(spark) if float_mode == "go" else None
+    return df.selectExpr(f"{display_expr('v', spark_type, go_float=go)} AS s").first()["s"]
 
 
 def test_go_fixed_repr_table():
@@ -80,6 +83,6 @@ def test_complex_json_null_rules(spark):
 def test_display_columns_formatter_override(spark):
     df = spark.createDataFrame([(1, dt.datetime(2024, 5, 1, 10, 0, 0))], "id long, ts timestamp")
     cols = display_columns(df, formatters={"ts": F.date_format(F.col("ts"), "yyyy-MM-dd")})
-    row = df.select(cols).first()
+    row = project(df, cols).first()
     assert row["id"] == "1"
     assert row["ts"] == "2024-05-01"
