@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import types as T
 
 from exporter_spark.formatters.base import BaseFormatter, Framing, sql_name, sql_str
-from exporter_spark.functions.tostring import _go_fixed_repr, _rfc3339nano, go_float_fn
+from exporter_spark.functions.tostring import _go_fixed_repr, _rfc3339nano, go_float_for
 
 # empty result ⇒ empty output, not "[]" (json.go:94-98)
 _NDJSON = Framing("", "\n", "\n")
@@ -121,7 +121,7 @@ def _quoted_escaped(c: str) -> str:
     return f"CASE WHEN contains({j}, {probe}) THEN {folded} ELSE {j} END"
 
 
-def _json_fragment(c: str, dt: T.DataType, go_float: str) -> str:
+def _json_fragment(c: str, dt: T.DataType, go_float: str | None) -> str:
     """Raw JSON token for the value ``c`` as SQL text, matching
     ``_json_token``'s rendering (the fidelity serializer): Go-style
     shortest floats ("11", not "11.0") via the go-float renderer named
@@ -170,11 +170,12 @@ def _json_fragment(c: str, dt: T.DataType, go_float: str) -> str:
     return f"CASE WHEN ({c} IS NULL) THEN 'null' ELSE {frag} END"
 
 
-def json_line_expr(schema: T.StructType, cols: list[str], go_float: str) -> str:
+def json_line_expr(schema: T.StructType, cols: list[str], go_float: str | None) -> str:
     """One NDJSON object per row as one SQL expression — the
     executor-side twin of ``JSONFormatter.stream_rows`` (same bytes,
     serialized in parallel instead of on the driver). ``go_float`` is
-    ``go_float_fn`` of the frame's session."""
+    ``go_float_for`` the frame: the float kernel's name, or None when
+    it has no float column."""
     by_name = {f.name: f.dataType for f in schema.fields}
     if not cols:
         return "'{}'"  # the '{' prefix below rides the first column
@@ -245,15 +246,16 @@ class JSONFormatter(BaseFormatter):
         line = json_line_expr(
             out.schema,
             [c for c in cols if c not in partition_by],
-            go_float_fn(df.sparkSession),
+            go_float_for(out),
         )
         return out.selectExpr(*map(sql_name, partition_by), f"{line} AS value")
 
     def stream_rows(self, df: DataFrame) -> tuple[DataFrame, Callable[[Row], str]]:
         """The fidelity stream renders each raw row on the driver with
-        ``_json_token``, not with ``json_line_expr``: that expression
-        renders top-level doubles through the go-float pandas UDF, and
-        a small export would pay the Python workers' start-up for it."""
+        ``_json_token``; the distributed path renders with
+        ``json_line_expr``. The two disagree only inside nested values
+        (``_json_fragment`` lists how); one renderer for both is
+        ROADMAP direction 7."""
         spec = self.spec
         out = self._dedup_columns(spec.compile_raw(df))
         # key order and the '"name":' prefixes are row-invariant —

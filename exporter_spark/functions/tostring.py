@@ -24,31 +24,31 @@ Semantics implemented:
 Expressions are SQL text (``display_expr``; names by ``sql_name``,
 literals by ``sql_str``), and a projection is one ``selectExpr``
 (``project``): every ``F.*`` call costs several py4j round trips, text
-costs one parse. Everything except the Go-exact float path is a
-JVM-side expression (whole-stage-codegen friendly). The Go-exact
-float formatter needs shortest-round-trip digits re-rendered without
-exponent notation, which no Spark builtin produces — it is an
-Arrow-vectorized pandas UDF, opt-in via ``float_mode="go"`` and
-called by its registered name (``go_float_fn``). The default
-``float_mode="java"`` uses Spark's CAST (Java ``Double.toString``)
-and stays fully codegen'd; at 100 TB that is the path you want unless
-byte-parity with the Go library is required.
+costs one parse. Every expression is JVM-side; none starts a Python
+worker. The Go-exact float formatter needs shortest-round-trip digits
+rendered without exponent notation, which no Spark builtin produces:
+it is the Java UDF ``javakernel/GoFloat.java``, opt-in via
+``float_mode="go"`` and called by its registered name
+(``go_float_fn``). Being a JVM expression, it stays inside the
+record projection, so an ordered, limited export keeps its one top-K
+job. The default ``float_mode="java"`` uses Spark's CAST (Java
+``Double.toString``, not always shortest) and needs no compiled
+kernel; use it unless byte-parity with the Go library is required.
 """
 
 from __future__ import annotations
 
-import os
 import re
 import string
 from decimal import Decimal
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-__all__ = ["display_expr", "display_columns", "go_float_str", "project", "sql_name", "sql_str"]
+from exporter_spark.javakernel import ensure_go_float_java
+
+__all__ = ["display_expr", "display_columns", "project", "sql_name", "sql_str"]
 
 # Go's zero time.Time (tostring.go:67-69: IsZero() ⇒ NULL).
 _GO_ZERO_TIME = "0001-01-01 00:00:00"
@@ -73,67 +73,22 @@ def _go_fixed_repr(v: float) -> str | None:
     return s or "0"
 
 
-def _make_go_float_udf():
-    """Build the UDF with the conversion logic in a closure so
-    cloudpickle serializes it BY VALUE — executors then don't need
-    exporter_spark on their PYTHONPATH (important when the caller's
-    session wasn't created by our get_spark).
-
-    Kernel: numpy's ``format_float_positional(unique=True, trim='-')``
-    is the same shortest-round-trip fixed-notation rendering as the
-    Decimal-based ``_go_fixed_repr`` (hypothesis-pinned equal in
-    tests/test_extension_points.py) at ~1.7x the throughput — this is
-    the hot path of ``float_mode="go"`` exports and the JSON array
-    serializer."""
-    import numpy as _np
-
-    _fmt = _np.format_float_positional
-
-    def fixed(v):
-        if v != v:
-            return "NaN"
-        if v == float("inf"):
-            return "+Inf"
-        if v == float("-inf"):
-            return "-Inf"
-        return _fmt(v, unique=True, trim="-")
-
-    @pandas_udf(T.StringType())
-    def go_float_str(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [fixed(v) for v in s.to_numpy()], index=s.index, dtype="object"
-        )
-
-    return go_float_str
-
-
-go_float_str = _make_go_float_udf()
-
-
 def go_float_fn(spark) -> str:
-    """The SQL name of the Go-parity float renderer on ``spark``,
-    registered on first use.
+    """The SQL name of the Go-parity float renderer on ``spark``: the
+    JVM kernel ``javakernel/GoFloat.java``, compiled and registered on
+    first use. A session with no JDK and no kernel jar shipped with
+    ``--jars`` gets ``build_jar``'s refusal; there is no other kernel
+    to fall back to."""
+    return ensure_go_float_java(spark)
 
-    Default: the Arrow/numpy kernel — numpy's C Dragon4
-    (format_float_positional) MEASURED 2.8× faster end-to-end than the
-    compiled BigDecimal JVM twin on the sf0.1 lineitem float_go export
-    (2.36s vs 6.58s, byte-identical output; SCALE.md round 5). The JVM
-    kernel (javakernel/GoFloat.java, fuzz-pinned byte-identical over
-    187k multi-regime doubles incl. binade-boundary
-    asymmetric-interval cases) exists for deployments where executor
-    Python workers are unavailable — opt in via
-    EXPORTER_SPARK_GO_FLOAT_KERNEL=java."""
-    if os.environ.get("EXPORTER_SPARK_GO_FLOAT_KERNEL") == "java":
-        try:
-            from exporter_spark.javakernel import ensure_go_float_java
 
-            return ensure_go_float_java(spark)
-        except Exception:  # noqa: BLE001 — no JDK / build failure
-            pass
-    if not getattr(spark, "_exporter_spark_go_float", False):
-        spark.udf.register("go_float_str", go_float_str)
-        spark._exporter_spark_go_float = True
-    return "go_float_str"
+def go_float_for(df: DataFrame) -> str | None:
+    """``go_float_fn`` of ``df``'s session when ``df`` has a top-level
+    float column, else None: such a frame needs no kernel."""
+    floats = (T.FloatType, T.DoubleType)
+    if any(isinstance(f.dataType, floats) for f in df.schema.fields):
+        return go_float_fn(df.sparkSession)
+    return None
 
 
 def jvm_str(s: str) -> str:
@@ -230,7 +185,7 @@ def display_expr(c: str, dt: T.DataType, *, go_float: str | None = None) -> str:
     NULL result ⇔ NULL cell (formatters decide the rendering).
     ``go_float``: None renders floats with Spark's CAST (codegen fast
     path); the name ``go_float_fn`` returned renders them with byte
-    parity to strconv.FormatFloat via the Arrow pandas UDF.
+    parity to strconv.FormatFloat through the JVM kernel.
     """
     if isinstance(dt, T.StringType):
         return c
@@ -276,7 +231,7 @@ def display_columns(
     dispatch, codec/csv/csv.go:195-205).
     """
     formatters = formatters or {}
-    go = go_float_fn(df.sparkSession) if float_mode == "go" else None
+    go = go_float_for(df) if float_mode == "go" else None
     out: list[str | Column] = []
     for f in df.schema.fields:
         if f.name in formatters:

@@ -1,4 +1,4 @@
-"""Build-and-register plumbing for the optional JVM kernels.
+"""Build-and-register plumbing for the JVM kernels.
 
 The sandbox ships a JDK (javac 17) but no Scala toolchain, so JVM
 kernels are plain-Java ``UDF1`` classes compiled on first use against
@@ -9,9 +9,11 @@ not create). The jar is content-addressed by the source hash, so an
 edited kernel rebuilds automatically and an unchanged one never
 recompiles.
 
-On a real cluster you would ship the prebuilt jar with ``--jars``;
-the ADD JAR path used here distributes the jar to executors the same
-way at runtime.
+Without a JDK, build the jar where one is (``build_jar()``) and start
+Spark with ``--jars`` naming it: a session whose ``spark.jars`` lists
+the jar of these sources registers the kernels without compiling.
+The Go-float renderer (``GoFloat``) has no other kernel, so a session
+with neither refuses float_go exports with ``build_jar``'s message.
 """
 
 from __future__ import annotations
@@ -44,30 +46,35 @@ def _pyspark_jars_glob() -> str:
     return os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
 
 
+def _sources() -> list[str]:
+    return sorted(os.path.join(_PKG_DIR, f) for f in os.listdir(_PKG_DIR) if f.endswith(".java"))
+
+
+def jar_name() -> str:
+    """The jar's file name: content-addressed by the kernel sources."""
+    h = hashlib.sha256()
+    for src in _sources():
+        with open(src, "rb") as f:
+            h.update(f.read())
+    return f"exporter_spark_javakernel_{h.hexdigest()[:16]}.jar"
+
+
 def build_jar() -> str:
     """Compile every kernel source in this package into one
     content-addressed jar under the system temp dir; return the jar
     path. Idempotent: an existing jar for the same source bytes is
     reused."""
-    srcs = sorted(
-        os.path.join(_PKG_DIR, f)
-        for f in os.listdir(_PKG_DIR)
-        if f.endswith(".java")
-    )
-    h = hashlib.sha256()
-    for src in srcs:
-        with open(src, "rb") as f:
-            h.update(f.read())
-    digest = h.hexdigest()[:16]
-    jar_path = os.path.join(
-        tempfile.gettempdir(), f"exporter_spark_javakernel_{digest}.jar"
-    )
+    srcs = _sources()
+    jar_path = os.path.join(tempfile.gettempdir(), jar_name())
     if os.path.exists(jar_path):
         return jar_path
     if not javac_available():
         raise RuntimeError(
-            "javac/jar not found — the Java kernels need a JDK; use the"
-            " pandas kernels instead"
+            "javac/jar not found on PATH: the JVM kernels, the float_go"
+            " renderer among them, are compiled on first use and need a"
+            f" JDK. Without one, build {os.path.basename(jar_path)} with"
+            " exporter_spark.javakernel.build_jar() where a JDK is, and"
+            " start Spark with --jars naming it"
         )
     with tempfile.TemporaryDirectory(prefix="javakernel_build_") as build:
         subprocess.run(
@@ -95,15 +102,15 @@ GO_FLOAT_UDF_NAME = "go_float_java"
 def _ensure(spark, udf_name: str, class_name: str, schema: str) -> str:
     """Compile (if needed), attach, and register one kernel UDF on
     this session; returns the registered function name. Idempotent
-    per session."""
+    per session. A jar shipped with ``--jars`` is already attached."""
     registered = getattr(spark, "_exporter_spark_java_kernels", None)
     if registered is None:
         registered = set()
         spark._exporter_spark_java_kernels = registered
     if udf_name in registered:
         return udf_name
-    jar = build_jar()
-    spark.sql(f"ADD JAR '{jar}'")
+    if jar_name() not in spark.conf.get("spark.jars", ""):
+        spark.sql(f"ADD JAR '{build_jar()}'")
     from pyspark.sql.types import _parse_datatype_string
 
     spark.udf.registerJavaFunction(
@@ -119,7 +126,8 @@ def ensure_gopher_java(spark) -> str:
 
 def ensure_go_float_java(spark) -> str:
     """Go-parity shortest-round-trip fixed-notation float renderer
-    (strconv.FormatFloat(v, 'f', -1, 64)) as a JVM UDF."""
+    (strconv.FormatFloat(v, 'f', -1, 64)) as a JVM UDF; raises
+    ``build_jar``'s refusal when no JDK or shipped jar provides it."""
     return _ensure(spark, GO_FLOAT_UDF_NAME, "GoFloat", "string")
 
 

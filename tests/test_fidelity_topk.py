@@ -7,6 +7,8 @@ into the record and ``Limit(Project(Sort))`` plans as
 rows. A record that references a column twice keeps the two Projects
 apart, and the stream becomes a range-partitioned global sort under
 ``CollectLimit`` (a sampling job plus shuffle stages, 2–3 jobs here).
+The Go float renderer is a JVM UDF, so float_go records fold the same
+way; a Python UDF would be extracted below the limit and block it.
 """
 
 from __future__ import annotations
@@ -26,11 +28,14 @@ CASES = {
     "csv_delimiter": ("csv", lambda s: s.with_delimiter(";")),
     "csv_null": ("csv", lambda s: s.with_null("NULL")),
     "csv_header_off": ("csv", lambda s: s.with_header(False)),
+    "csv_float_go": ("csv", lambda s: s.with_float_go()),
     "xml": ("xml", lambda s: s),
     "xml_null": ("xml", lambda s: s.with_null("NULL")),
     "xml_declaration_off": ("xml", lambda s: dataclasses.replace(s, declaration=False)),
+    "xml_float_go": ("xml", lambda s: s.with_float_go()),
     "html": ("html", lambda s: s),
     "html_null": ("html", lambda s: s.with_null("NULL")),
+    "html_float_go": ("html", lambda s: s.with_float_go()),
     "json": ("json", lambda s: s),
     "ndjson": ("json", lambda s: s.with_newline_delimited()),
 }
@@ -65,18 +70,6 @@ def test_ordered_limited_write_string_is_one_topk_job(table, count_jobs, case, n
     rows = exporter.formatter.stream_rows(table)[0]
     plan = rows._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     assert "TakeOrderedAndProject" in plan and "CollectLimit" not in plan, plan
-
-
-@pytest.mark.parametrize("n_rows", [0, LIMIT])
-@pytest.mark.parametrize("fmt", ["csv", "xml", "html"])
-def test_float_go_write_string_jobs_do_not_grow(table, count_jobs, fmt, n_rows):
-    # go_float_str is a pandas UDF: Catalyst extracts it into a Python
-    # evaluation node below the limit, so these plans stay a global
-    # sort under CollectLimit (3 jobs) whatever the record expression;
-    # a JVM float_go kernel would make them top-K too.
-    exporter = Exporter(table, fmt, _ordered(n_rows).with_float_go())
-    jobs, _ = count_jobs(exporter.write_string)
-    assert jobs <= 3, f"{fmt} float_go: {jobs} Spark jobs"
 
 
 def test_unordered_limit_csv_and_xml_run_no_more_jobs_than_html(table, count_jobs):

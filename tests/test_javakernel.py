@@ -84,61 +84,125 @@ def test_auto_kernel_never_raises(spark, sf_dir, monkeypatch):
     assert out.count() > 0
 
 
-@needs_jdk
-def test_go_float_java_matches_python_renderer(spark):
-    """GoFloat.java vs the numpy Dragon4 renderer: byte-identical over
-    seeded multi-regime doubles. The JVM twin exists for Python-less
-    deployments (EXPORTER_SPARK_GO_FLOAT_KERNEL=java); the numpy
-    kernel measured 2.8x faster and stays the default — this pin keeps
-    the twin honest either way. Regimes: random bit patterns, money
-    decimals, powers of 10/2, binade+-1ulp (asymmetric parse
-    intervals), subnormals, the 1e15-1e17 shortest-digit band."""
+def _go_float_cases() -> list[float]:
+    """Seeded multi-regime doubles: random bit patterns, money
+    decimals, ±1 ulp around every power of ten (where the digit count
+    changes) and of two (binade boundaries, where the parse interval
+    is asymmetric), every subnormal power of two, integers near 2^53
+    and 2^63, 17-digit values, the 1e15-1e17 band and the extremes."""
     import random
     import struct
 
-    from pyspark.sql import functions as F
+    import numpy as np
 
-    from exporter_spark.functions.tostring import go_float_str
-    from exporter_spark.javakernel import ensure_go_float_java
+    def bits(d):
+        return struct.unpack("<q", struct.pack("<d", d))[0]
 
-    ensure_go_float_java(spark)
+    def from_bits(b):
+        return struct.unpack("<d", struct.pack("<q", b))[0]
+
     rng = random.Random(20260814)
     vals = []
     while len(vals) < 8000:
-        b = rng.getrandbits(64)
-        d = struct.unpack("<d", struct.pack("<Q", b))[0]
+        d = from_bits(rng.getrandbits(64) - (1 << 63))
         if d == d and abs(d) != float("inf"):
             vals.append(d)
     for _ in range(3000):
         vals.append(round(rng.uniform(-1e6, 1e6), rng.randint(0, 6)))
-    for e in range(-320, 308, 7):
-        vals.append(10.0 ** e)
-        vals.append(rng.uniform(1, 9) * 10.0 ** e)
-    for e in range(-1074, 1024, 5):
-        base = 2.0 ** e
-        vals.append(base)
-        bits = struct.unpack("<Q", struct.pack("<d", base))[0]
-        vals.append(struct.unpack("<d", struct.pack("<Q", bits + 1))[0])
-        if base > 5e-324:
-            vals.append(struct.unpack("<d", struct.pack("<Q", bits - 1))[0])
+    for e in range(-323, 309):
+        p = float(f"1e{e}")
+        vals += [from_bits(bits(p) + u) for u in (-1, 0, 1)]
+        vals.append(rng.uniform(1, 9) * p)
+    for e in range(-1074, 1024):
+        p = 2.0 ** e
+        vals += [from_bits(bits(p) + u) for u in (-1, 0, 1)]
+    for n in (2 ** 53, 2 ** 63):
+        vals += [float(n + u) for u in range(-40, 41)]
+        vals += [from_bits(bits(float(n)) + u) for u in range(-20, 21)]
+    seventeen = 0
+    while seventeen < 1000:
+        d = rng.uniform(1.0, 10.0) * 10.0 ** rng.randint(-300, 300)
+        if len(np.format_float_scientific(d, unique=True, trim="-").split("e")[0]) == 18:
+            vals.append(d)  # 17 digits and the point
+            seventeen += 1
     for _ in range(2000):
         vals.append(rng.uniform(1e15, 1e17))
     vals += [0.0, -0.0, 1.0, -1.0, 0.1, 0.2, 0.3, 2.0 ** 60, 1e16, 1e16 + 2,
-             5e-324, 1.7976931348623157e308, 2.2250738585072014e-308, 2.0e-3,
+             5e-324, -5e-324, 1e-323, 1.7976931348623157e308, -1.7976931348623157e308,
+             2.2250738585072014e-308, 2.225073858507201e-308, 2.0e-3,
              1.0 / 3.0, 6.483618076376552e+178]
-    vals = [v for v in vals if v == v and abs(v) != float("inf")]
-    df = spark.createDataFrame([(v,) for v in vals], "x double")
-    bad = (
-        df.select(
-            "x",
-            go_float_str(F.col("x")).alias("py"),
-            F.call_udf("go_float_java", F.col("x")).alias("jv"),
-        )
-        .filter(F.col("py") != F.col("jv"))
-        .limit(5)
-        .collect()
-    )
-    assert not bad, bad
+    return [v for v in vals if v == v and abs(v) != float("inf")]
+
+
+@needs_jdk
+def test_go_float_java_matches_python_renderer(spark):
+    """GoFloat.java against numpy's shortest fixed-notation renderer
+    (``format_float_positional(unique=True, trim="-")``, hypothesis-
+    pinned to the Decimal port of Go's algorithm in
+    test_extension_points), computed on the driver over the same
+    doubles: byte-identical on every one, and the Go spellings of the
+    non-finite values."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from exporter_spark.javakernel import ensure_go_float_java
+
+    fn = ensure_go_float_java(spark)
+    vals = _go_float_cases()
+    rows = [(i, v) for i, v in enumerate(vals)]
+    rows += [(len(rows), float("nan")), (len(rows) + 1, float("inf")), (len(rows) + 2, float("-inf"))]
+    df = spark.createDataFrame(rows, "i long, x double")
+    got = dict(df.select("i", F.call_udf(fn, F.col("x")).alias("s")).collect())
+    want = [np.format_float_positional(v, unique=True, trim="-") for v in vals]
+    want += ["NaN", "+Inf", "-Inf"]
+    bad = [(rows[i][1], got[i], w) for i, w in enumerate(want) if got[i] != w]
+    assert len(got) == len(want) and not bad, bad[:5]
+
+
+def test_float_go_without_jdk_is_refused(spark, monkeypatch, tmp_path):
+    """No JDK and no shipped kernel jar: float_go exports raise
+    ``build_jar``'s refusal, which names what is missing and the
+    ``--jars`` alternative, instead of falling back to a slower
+    renderer. A frame without a float column needs no kernel, and a
+    session whose ``spark.jars`` lists the kernel jar needs no JDK."""
+    import exporter_spark.javakernel as jk
+    from exporter_spark import Exporter, ExportSpec
+
+    jk.ensure_go_float_java(spark)  # the classes are on the session's classpath
+    real_build_jar = jk.build_jar
+
+    def build_jar_without_jdk():
+        # neither javac nor a jar built before (the temp dir is empty)
+        with monkeypatch.context() as m:
+            m.setattr(jk.shutil, "which", lambda _: None)
+            m.setattr(jk.tempfile, "gettempdir", lambda: str(tmp_path))
+            return real_build_jar()
+
+    monkeypatch.setattr(jk, "build_jar", build_jar_without_jdk)
+    monkeypatch.setattr(spark, "_exporter_spark_java_kernels", set(), raising=False)
+    df = spark.sql("SELECT id, id / 8 AS f64 FROM range(4)")
+    refusal = r"javac/jar not found.*--jars"
+    with pytest.raises(RuntimeError, match=refusal):
+        Exporter(df, "csv", ExportSpec().with_float_go()).write_string()
+    with pytest.raises(RuntimeError, match=refusal):
+        Exporter(df, "json", ExportSpec()).formatter.write_array_file(df, str(tmp_path / "a.json"))
+    ints = df.select("id")
+    Exporter(ints, "json", ExportSpec()).formatter.write_array_file(ints, str(tmp_path / "b.json"))
+    assert (tmp_path / "b.json").read_text().startswith('[\n{"id":0}')
+
+    conf = spark.conf
+
+    class ShippedJar:
+        def get(self, key, *default):
+            if key == "spark.jars":
+                return f"file:/jars/{jk.jar_name()}"
+            return conf.get(key, *default)
+
+        def __getattr__(self, name):
+            return getattr(conf, name)
+
+    monkeypatch.setattr(spark, "conf", ShippedJar())
+    assert "\n1,0.125\n" in Exporter(df, "csv", ExportSpec().with_float_go()).write_string()
 
 
 @needs_jdk

@@ -87,15 +87,17 @@ def test_java_float_export_has_no_python_eval(spark, sf_dir):
     assert "EvalPython" not in plan  # neither Batch- nor Arrow-
 
 
-def test_go_float_uses_arrow_not_row_python(spark, sf_dir):
+def test_go_float_plan_has_no_python_eval(spark, sf_dir):
+    """The Go float renderer is a JVM UDF: the plan calls it inside
+    the projection and evaluates no Python UDF of any kind."""
     from exporter_spark.functions.tostring import display_columns, project
     from exporter_spark.sources.files import load_table
 
     e = load_table(spark, sf_dir, "events")
     out = project(e, display_columns(e, float_mode="go"))
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan  # vectorized
-    assert "BatchEvalPython" not in plan  # never row-at-a-time
+    assert "go_float_java(" in plan, plan
+    assert "EvalPython" not in plan, plan
 
 
 def _n_shuffles(plan: str) -> int:

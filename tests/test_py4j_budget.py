@@ -55,7 +55,7 @@ def _spec() -> ExportSpec:
 @pytest.fixture(scope="module")
 def frames(spark):
     # one export per case first, so that once-per-session work (the
-    # float renderer's registration) stays out of the counts
+    # float kernel's registration) stays out of the counts
     for fmt, variant in CASES.values():
         Exporter(_frame(spark, 1), fmt, variant(_spec())).write_string()
     Exporter(_frame(spark, 1), "csv", _spec().with_float_go()).write_string()
@@ -78,9 +78,11 @@ def test_write_string_py4j_budget(frames, count_py4j, case):
     assert extra <= PER_EXTRA_COLUMN * 27, f"{case}: 9 -> 36 columns added {extra} commands"
 
 
-def test_float_go_write_string_py4j_budget(frames, count_py4j):
+def test_float_go_write_string_py4j_budget(frames, count_py4j, count_stages):
     sent = _commands(count_py4j, frames[1], "csv", _spec().with_float_go())
     assert sent <= BUDGET, f"csv float_go: {sent} py4j commands"
+    jobs, stages, _ = count_stages(Exporter(frames[1], "csv", _spec().with_float_go()).write_string)
+    assert (jobs, stages) == (1, 1), f"csv float_go: {jobs} jobs, {stages} stages"
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
